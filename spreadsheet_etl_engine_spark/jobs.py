@@ -4,7 +4,10 @@
 ``run_job`` resolves a :class:`JobConfig` (Dashboard equivalent), loads the
 source table, parses the map table, compiles + executes the pipeline, and
 writes the output — reporting the produced row count like the reference's
-success alert (``main.gs:131-135``).
+success alert (``main.gs:131-135``).  The count comes from the write pass
+itself, for every sink, through a ``DataFrame.observe`` metric: the output
+is never read back.  Only a ``unique`` constraint and ``fail`` mode scan
+again (below).
 
 Two reference roadmap items (``README.md:123-125``) live here too:
 
@@ -13,9 +16,10 @@ Two reference roadmap items (``README.md:123-125``) live here too:
   ``on_violation="fail"`` asserts BEFORE the sink writes (one extra
   output scan — correctness over cost, nothing bad lands);
   ``on_violation="report"`` attaches the row-local constraint counters
-  to the write pass itself via ``DataFrame.observe`` — zero extra scans
-  at any scale — and returns the counts (``unique`` constraints need
-  their own keyed aggregation either way).
+  to the same observed write pass — zero extra scans at any scale — and
+  returns the counts.  ``unique`` constraints need their own keyed
+  aggregation: over the written files for a parquet/ORC sink (read with
+  the known schema), over the plan for CSV or ``write=False``.
 * **Execution history / logging dashboard**: pass ``history_path`` to
   append one row per run (timestamp, config, status, rows, duration,
   violation total, error) to a parquet log — including failed runs —
@@ -26,6 +30,7 @@ Two reference roadmap items (``README.md:123-125``) live here too:
 
 from __future__ import annotations
 
+import functools
 import time
 from collections.abc import Mapping, Sequence
 from dataclasses import dataclass, field
@@ -35,10 +40,16 @@ from pyspark.sql import functions as F
 
 from spreadsheet_etl_engine_spark.config import JobConfig, load_config
 from spreadsheet_etl_engine_spark.errors import EngineError, MissingSheetError
+from spreadsheet_etl_engine_spark.operators.quality import (
+    _violation_expr,
+    assert_constraints,
+    check_constraints,
+    validate_constraints,
+)
 from spreadsheet_etl_engine_spark.plans.parser import parse_map_table
 from spreadsheet_etl_engine_spark.plans.runner import run_mapping
 from spreadsheet_etl_engine_spark.sources.readers import read_csv
-from spreadsheet_etl_engine_spark.sources.writers import write_csv, write_parquet
+from spreadsheet_etl_engine_spark.sources.writers import write_csv, write_orc, write_parquet
 
 
 @dataclass(frozen=True)
@@ -155,9 +166,12 @@ def run_job(
     first — the reference's Map sheet as a stored table).  ``config.output``
     is the output path (parquet unless it ends with .csv or .orc);
     ``write=False`` skips the sink and just returns the DataFrame + count.
+    ``rows_written`` is observed on the write pass (or the count when not
+    writing); the output is not read back.
 
     ``constraints`` validates the produced output (module docstring:
-    "fail" gates the sink, "report" rides the write pass via observe).
+    "fail" gates the sink with one extra scan, "report" rides the write
+    pass via observe; only ``unique`` adds a keyed aggregation).
     ``history_path`` appends a run record — ok or error — to the
     execution-history parquet log.
     """
@@ -220,17 +234,9 @@ def _run_job_inner(
     spec = parse_map_table(map_table, source.columns)
     out = run_mapping(source, spec, mode=mode)
 
-    obs: Observation | None = None
     row_local: list = []
     uniques: list = []
     if constraints:
-        from spreadsheet_etl_engine_spark.operators.quality import (
-            _violation_expr,
-            assert_constraints,
-            check_constraints,
-            validate_constraints,
-        )
-
         if on_violation not in ("fail", "report"):
             raise EngineError(
                 f'on_violation must be "fail" or "report", got "{on_violation}".'
@@ -238,63 +244,51 @@ def _run_job_inner(
         # Same declaration-time checks in BOTH modes: a duplicate name
         # must not silently collapse two observe metrics in report mode.
         validate_constraints(constraints)
-        row_local = [c for c in constraints if c.kind != "unique"]
-        uniques = [c for c in constraints if c.kind == "unique"]
         if on_violation == "fail":
             # Gate BEFORE the sink: one extra scan of the output, and
             # nothing bad ever lands (main.gs-style fail-loud, data-level).
             assert_constraints(out, constraints)
-        elif row_local:
-            # Piggyback the counters on whatever action runs below —
-            # write or count — so reporting adds zero scans.
-            obs = Observation("dq")
-            out = out.observe(
-                obs,
-                F.count(F.lit(1)).alias("_n_rows"),
-                *[_violation_expr(c) for c in row_local],
-            )
-
-    # The reference reports the produced row count (main.gs:133).  When
-    # writing, count the *written* output instead of re-executing the whole
-    # pipeline (parquet counts come from file metadata; a second full
-    # scan+shuffle would double the job's cost).
-    written: DataFrame | None = None
-    if write:
-        if cfg.output.endswith(".csv"):
-            write_csv(out, cfg.output)
-            # multiLine: values with embedded newlines are quoted by the
-            # writer; the default line-splitting reader would split them
-            # into phantom rows and inflate the reported count.
-            rows = (spark.read.option("header", "true")
-                    .option("multiLine", "true").csv(cfg.output).count())
-        elif cfg.output.endswith(".orc"):
-            from spreadsheet_etl_engine_spark.sources.writers import write_orc
-
-            write_orc(out, cfg.output)
-            written = spark.read.orc(cfg.output)
-            rows = written.count()
         else:
-            write_parquet(out, cfg.output)
-            written = spark.read.parquet(cfg.output)
-            rows = written.count()
+            row_local = [c for c in constraints if c.kind != "unique"]
+            uniques = [c for c in constraints if c.kind == "unique"]
+
+    # The reference reports the produced row count (main.gs:133).  It and
+    # the report-mode counters ride the one action below — the write, or
+    # a count when not writing — so the output is never read back.
+    # Counting logical rows also keeps CSV values with embedded newlines
+    # from inflating the count.
+    obs = Observation("written")
+    observed = out.observe(
+        obs,
+        F.count(F.lit(1)).alias("_n_rows"),
+        *[_violation_expr(c) for c in row_local],
+    )
+    if not write:
+        observed.count()
+    elif cfg.output.endswith(".csv"):
+        write_csv(observed, cfg.output)
+    elif cfg.output.endswith(".orc"):
+        write_orc(observed, cfg.output)
     else:
-        rows = out.count()
+        write_parquet(observed, cfg.output)
+    got = obs.get
+    rows = int(got["_n_rows"])
 
     violations: dict[str, int] | None = None
     if constraints and on_violation == "report":
-        violations = {}
-        if obs is not None:
-            got = obs.get      # materialized by the write/count above
-            violations.update(
-                {c.name: int(got[c.name] or 0) for c in row_local})
+        violations = {c.name: int(got[c.name] or 0) for c in row_local}
         if uniques:
-            # unique needs a keyed aggregation either way — run it against
-            # the rows JUST MATERIALIZED to the typed sink (parquet/ORC)
-            # instead of re-executing the whole source->mapping pipeline a
-            # second time.  CSV round-trips values as strings and
-            # write=False has no materialization, so those recompute from
-            # the plan (`out`).
-            target = written if written is not None else out
+            # unique needs a keyed aggregation.  A parquet/ORC sink has
+            # just materialized the rows, so aggregate the written files
+            # (read with the known schema: no inference job) instead of
+            # re-running the source->mapping pipeline.  CSV round-trips
+            # values as strings and write=False materializes nothing, so
+            # those recompute from the plan.
+            target = out
+            if write and not cfg.output.endswith(".csv"):
+                reader = spark.read.schema(out.schema)
+                target = (reader.orc(cfg.output) if cfg.output.endswith(".orc")
+                          else reader.parquet(cfg.output))
             for r in check_constraints(target, uniques).collect():
                 violations[r["constraint"]] = int(r["n_violations"])
     return JobResult(output=out, rows_written=rows, config=cfg,
@@ -340,16 +334,21 @@ def run_workbook(
     ORDER is presentation, the reference contract is content.
     """
     from spreadsheet_etl_engine_spark.sources import xlsx_native
-    from spreadsheet_etl_engine_spark.sources.readers import read_excel
+    from spreadsheet_etl_engine_spark.sources.readers import sheet_frame
     from spreadsheet_etl_engine_spark.sources.writers import (
         formula_passthrough_columns,
     )
 
     names = xlsx_native.sheet_names(in_path)
+
+    # Every sheet is parsed at most once: the grids that configure and
+    # feed the job are reused when the non-output sheets are preserved.
+    @functools.cache
+    def grid(name: str) -> tuple[list[str], list[list[str]], list[list[bool]]]:
+        return xlsx_native.read_workbook(in_path, sheet_name=name)
+
     if "Dashboard" in names:
-        d_header, d_rows, _ = xlsx_native.read_workbook(
-            in_path, sheet_name="Dashboard"
-        )
+        d_header, d_rows, _ = grid("Dashboard")
         # The reference iterates every Dashboard row as a key/value pair
         # (main.gs:146-154) — there is no header row to skip; unknown
         # keys (including a decorative "Key"/"Value" row) are ignored.
@@ -359,9 +358,9 @@ def run_workbook(
     for sheet in (cfg.source, cfg.map):
         if sheet not in names:
             raise MissingSheetError(f'Table "{sheet}" not found.')
-    m_header, m_rows, _ = xlsx_native.read_workbook(in_path, sheet_name=cfg.map)
+    m_header, m_rows, _ = grid(cfg.map)
     map_table = [m_header] + m_rows
-    source = read_excel(spark, in_path, sheet_name=cfg.source, fidelity=True)
+    source = sheet_frame(spark, grid(cfg.source), fidelity=True)
     spec = parse_map_table(map_table, source.columns)
     if passthrough:
         ordered = formula_passthrough_columns(source, spec)
@@ -397,7 +396,7 @@ def run_workbook(
     for name in names:
         if name == cfg.output:
             continue
-        header, rows, flags = xlsx_native.read_workbook(in_path, sheet_name=name)
+        header, rows, flags = grid(name)
         revived = [
             tuple(_revive(v, f) for v, f in zip(r, fl))
             for r, fl in zip(rows, flags)

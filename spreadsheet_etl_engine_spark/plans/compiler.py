@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -308,12 +309,20 @@ class MappingCompiler:
                 return F.lit(instruction)
             return self._substituted_string(instruction)
         # Fidelity mode: the substituted *value* may itself name a header
-        # (dynamic indirection). Chain of whens over the header list.
+        # (dynamic indirection): look it up in the shared header map.
         substituted = self._substituted_string(instruction)
-        result = substituted
-        for h in reversed(self.headers):
-            result = F.when(substituted == F.lit(h), F.col(h).cast("string")).otherwise(result)
-        return result
+        names, values = self._header_lookup
+        return F.when(substituted.isin(names), values[substituted]).otherwise(substituted)
+
+    @cached_property
+    def _header_lookup(self) -> tuple[list[str], Column]:
+        """Header names and a ``header -> value-as-string`` map column,
+        built once per compiler and shared by every DIRECT column.  The
+        lookup is guarded by ``isin`` rather than coalesced: a header
+        whose cell is NULL must yield NULL, not the substituted text."""
+        names = list(dict.fromkeys(self.headers))
+        pairs = [c for h in names for c in (F.lit(h), F.col(h).cast("string"))]
+        return names, F.create_map(*pairs)
 
     def compile_columns(self, spec: MappingSpec) -> list[Column]:
         """Ordered projection list with topological resolution.

@@ -2688,6 +2688,16 @@ def get(name: str) -> RegisteredQuery:
 # * session.py — daemon-module conf now local-master-gated (r15
 #   ADVICE): engine-wide wiring, no per-query output change.
 DRIVER_PRIORITY: tuple[str, ...] = (
+    # --- single-pass job lifecycle changed bytes: the fidelity DIRECT
+    # header lookup (plans/compiler.py), the RFC 4180 quote escape in
+    # read_csv/write_csv, and read_excel's grid -> frame step (now
+    # sources.readers.sheet_frame).  Typed-mode compiles are
+    # byte-unchanged, so dsl_a1_formula, dsl_a1_forward and the
+    # dsl_v2_* rows ride.  jobs.py's changes run under dsl_workbook_job
+    # (already seated).  The last three r15 fillers make room. ---
+    "dsl_fidelity_strings",
+    "dsl_csv_roundtrip",
+    "dsl_xlsx_roundtrip",
     # --- r16 changed-bytes re-verifications (audit above) ---
     "similarity_topk_ivfpq",
     "multimodal_decode",
@@ -2760,9 +2770,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "dedup_components",
     "dedup_embedding_neardup",
     "dedup_incremental",
-    "dedup_index_probe",
-    "dedup_keep_best",
-    "dedup_minhash_signature",
 )
 
 DRIVER_CHECK_BUDGET = 50

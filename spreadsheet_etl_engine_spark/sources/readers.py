@@ -118,9 +118,13 @@ def read_csv(
 
     if multiline is None:
         multiline = fidelity
+    # escape='"': RFC 4180 doubles a quote inside a quoted field; Spark's
+    # default backslash escape would keep a spreadsheet export's ""
+    # verbatim and misread a field that ends in a backslash.
     reader = (
         spark.read.option("header", "true")
         .option("multiLine", "true" if multiline else "false")
+        .option("escape", '"')
     )
     if schema is not None:
         if fidelity:
@@ -235,11 +239,23 @@ def read_excel(
     whose cells are all number cells come back typed: ``bigint`` when
     every value is integral, ``double`` otherwise.
     """
-    from pyspark.sql import types as T
-
     from spreadsheet_etl_engine_spark.sources import xlsx_native
 
-    header, rows, numeric = xlsx_native.read_workbook(path, sheet_name=sheet_name)
+    grid = xlsx_native.read_workbook(path, sheet_name=sheet_name)
+    return sheet_frame(spark, grid, fidelity=fidelity)
+
+
+def sheet_frame(
+    spark: SparkSession,
+    grid: tuple[list[str], list[list[str]], list[list[bool]]],
+    *, fidelity: bool = False,
+) -> DataFrame:
+    """A DataFrame over one already-parsed sheet, the ``(header, rows,
+    numeric_flags)`` triple ``xlsx_native.read_workbook`` returns; column
+    typing as in :func:`read_excel`."""
+    from pyspark.sql import types as T
+
+    header, rows, numeric = grid
     if fidelity or not rows:
         schema = T.StructType([T.StructField(h, T.StringType()) for h in header])
         return spark.createDataFrame([tuple(r) for r in rows], schema)

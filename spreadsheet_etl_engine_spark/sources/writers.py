@@ -31,15 +31,17 @@ def write_parquet(df: DataFrame, path: str, *, partition_by: list[str] | None = 
 
 def write_csv(df: DataFrame, path: str) -> None:
     """RFC4180 CSV writer: embedded separators/quotes/newlines are
-    quoted, and leading/trailing whitespace is PRESERVED — Spark's
-    writer strips it by default (ignore*WhiteSpace default true on
-    write, unlike read), which silently mangled padded values (r9
-    edge-family-10 find).  Format limitation, documented and pinned:
+    quoted, a quote inside a value is doubled (``escape='"'``, which
+    ``read_csv`` matches), and leading/trailing whitespace is PRESERVED
+    — Spark's writer strips it by default (ignore*WhiteSpace default
+    true on write, unlike read), which silently mangled padded values
+    (r9 edge-family-10 find).  Format limitation, documented and pinned:
     NULL and '' both serialize as an empty field, so the reader maps
     both to NULL — CSV cannot distinguish them; feeds that need the
     distinction belong in parquet/ORC/JSON."""
     (
         df.write.mode("overwrite").option("header", "true")
+        .option("escape", '"')
         .option("ignoreLeadingWhiteSpace", "false")
         .option("ignoreTrailingWhiteSpace", "false")
         .csv(path)

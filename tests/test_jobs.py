@@ -364,3 +364,87 @@ def test_run_job_rejects_duplicate_constraint_names_in_report_mode(spark, sf_dir
             on_violation="report",
             write=False,
         )
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (result, Spark jobs run)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_job_runs_no_job_after_the_write(spark, sf_dir, tmp_path):
+    """The row count and the report-mode counters ride the write itself:
+    run_job runs exactly the write's jobs.  A unique constraint adds only
+    its keyed aggregation over the written files, read with the known
+    schema (no schema-inference job)."""
+    from spreadsheet_etl_engine_spark.operators.quality import (
+        check_constraints, in_range, not_null, unique)
+    from spreadsheet_etl_engine_spark.plans.parser import parse_map_table
+    from spreadsheet_etl_engine_spark.plans.runner import run_mapping
+    from spreadsheet_etl_engine_spark.sources.writers import write_parquet
+
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    spec = parse_map_table(MAP_TABLE, li.columns)
+    plain = str(tmp_path / "plain")
+    _, n_write = _jobs_in_group(
+        spark, "plain-write", lambda: write_parquet(run_mapping(li, spec), plain))
+
+    row_local = [not_null("ok_key", "OrderKey"), in_range("g", "Gross", 0.0, 10.0)]
+    result, n_job = _jobs_in_group(spark, "report-job", lambda: run_job(
+        spark, config={"output": str(tmp_path / "o1")}, map_table=MAP_TABLE,
+        source_df=li, constraints=row_local, on_violation="report"))
+    assert result.violations == {"ok_key": 0, "g": result.rows_written}
+    assert n_job == n_write
+
+    keyed = [unique("key_unique", "OrderKey")]
+    out2 = str(tmp_path / "o2")
+    result, n_unique = _jobs_in_group(spark, "unique-job", lambda: run_job(
+        spark, config={"output": out2}, map_table=MAP_TABLE,
+        source_df=li, constraints=row_local + keyed, on_violation="report"))
+    assert result.violations["key_unique"] > 0
+    _, n_agg = _jobs_in_group(spark, "unique-agg", lambda: check_constraints(
+        spark.read.schema(result.output.schema).parquet(out2), keyed).collect())
+    assert n_unique == n_write + n_agg
+
+
+def test_run_job_rows_written_for_every_sink(spark, tmp_path):
+    """rows_written is the logical row count for parquet, ORC and CSV
+    alike — a CSV value with an embedded newline is one row, not two."""
+    src = spark.createDataFrame(
+        [(1, "one\nline"), (2, "plain"), (3, 'crlf "q"\r\nend'), (4, "x")],
+        "k long, v string")
+    map_table = [["Rule", "Instruction"], ["_filter:f", "eval: src[k] >= 2"],
+                 ["K", "src[k]"], ["V", "src[v]"]]
+    written = {
+        ext: run_job(spark, config={"output": str(tmp_path / f"out.{ext}")},
+                     map_table=map_table, source_df=src).rows_written
+        for ext in ("parquet", "orc", "csv")
+    }
+    assert written == {"parquet": 3, "orc": 3, "csv": 3}
+
+
+def test_run_workbook_parses_each_sheet_once(spark, tmp_path, monkeypatch):
+    from collections import Counter
+
+    from spreadsheet_etl_engine_spark.jobs import run_workbook
+    from spreadsheet_etl_engine_spark.sources import xlsx_native
+
+    src = str(tmp_path / "in.xlsx")
+    _demo_workbook(src)
+    parsed: Counter = Counter()
+    real = xlsx_native.read_workbook
+
+    def counting(path, *, sheet_name=0):
+        parsed[sheet_name] += 1
+        return real(path, sheet_name=sheet_name)
+
+    monkeypatch.setattr(xlsx_native, "read_workbook", counting)
+    result = run_workbook(spark, src, str(tmp_path / "out.xlsx"))
+    assert result.rows_written == 3
+    assert parsed == {"Dashboard": 1, "Rules": 1, "Data": 1}

@@ -811,6 +811,8 @@ def test_csv_hostile_roundtrip(spark, tmp_path):
         (5, "  padded  "),
         (8, "back\\slash"),
         (9, "tab\there"),
+        (10, "ends in \\"),
+        (11, 'escaped \\"q\\"'),
     ]
     df = spark.createDataFrame(
         hostile + [(6, ""), (7, None)], "k int, v string"
@@ -818,7 +820,7 @@ def test_csv_hostile_roundtrip(spark, tmp_path):
     path = str(tmp_path / "hostile_csv")
     write_csv(df, path)
     back = read_csv(spark, path, fidelity=True)
-    assert back.count() == 9, "quoted newline split records into fragments"
+    assert back.count() == 11, "quoted newline split records into fragments"
     got = {r["k"]: r["v"] for r in back.collect()}
     for k, v in hostile:
         assert got[str(k)] == v, (k, v, got[str(k)])
@@ -827,7 +829,15 @@ def test_csv_hostile_roundtrip(spark, tmp_path):
     # a multiline feed opts in explicitly.
     typed = read_csv(spark, path, schema="k int, v string", multiline=True,
                      mode="PERMISSIVE")
-    assert typed.count() == 9
+    assert typed.count() == 11
+
+    # A spreadsheet export, written by hand: RFC 4180 doubles a quote
+    # inside a quoted field, and a backslash is an ordinary character.
+    exported = tmp_path / "exported.csv"
+    exported.write_text(
+        'k,v\n1,"say ""hi"""\n2,C:\\temp\n3,"dir\\"\n4,"a\\""b"\n')
+    got = {r["k"]: r["v"] for r in read_csv(spark, str(exported), fidelity=True).collect()}
+    assert got == {"1": 'say "hi"', "2": "C:\\temp", "3": "dir\\", "4": 'a\\"b'}
 
 
 def test_palette_png_roundtrip_all_filters_and_trns():
