@@ -1,12 +1,14 @@
-"""Two-SF promotion gate: run the local DuckDB parity test for a set of
+"""Two-SF check-window gate: run the local DuckDB parity test for a set of
 queries at BOTH sf0.001 (the default test scale) and sf0.01 (the scale the
-driver's correctness check runs at), so a head promotion never discovers an
-sf-dependent mismatch for the first time in the driver run.
+driver's correctness check runs at), so a query entering the driver's check
+window never discovers an sf-dependent mismatch for the first time in the
+driver run.
 
 Usage:
     python scripts/check_promotions.py name1 name2 ...
-    python scripts/check_promotions.py --promoted   # every DRIVER_PRIORITY
-                                                    # entry (full head gate)
+    python scripts/check_promotions.py --promoted   # the first
+        # DRIVER_CHECK_BUDGET entries of queries(): every query changed
+        # since its last green driver row, then the oldest green rows
 
 Exit code 0 = all names pass at both scales.  Queries without an oracle
 run the rows-only check pytest applies to them.
@@ -30,11 +32,7 @@ def main() -> int:
     if not args:
         print(__doc__)
         return 2
-    # --promoted gates what the driver will actually verify: the first
-    # DRIVER_CHECK_BUDGET entries of queries() — identical to
-    # DRIVER_PRIORITY today (50 == 50), but if the priority list ever
-    # shrinks, insertion-order fillers enter the driver head and must
-    # pass this gate too (r9 lattice review).
+    # --promoted gates what the driver will actually verify.
     if args == ["--promoted"]:
         names = list(registry.queries())[: registry.DRIVER_CHECK_BUDGET]
     else:
@@ -55,9 +53,9 @@ def main() -> int:
             cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         )
         if rc != 0:
-            print(f"FAILED at {sf} — fix before promoting into DRIVER_PRIORITY")
+            print(f"FAILED at {sf} — fix before the driver's next round")
             return rc
-    print("promotion gate green at both scales")
+    print("check-window gate green at both scales")
     return 0
 
 

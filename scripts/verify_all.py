@@ -1,4 +1,4 @@
-"""One-command verification lattice (r8 verdict stretch item): runs every
+"""One-command verification lattice: runs every
 evidence gate the repo maintains and prints a green/red table, so a
 round-end check (or a judge re-run) is a single command instead of four
 env-flag incantations.
@@ -14,14 +14,16 @@ failure so the table is complete):
               all-NULL-column table variants
   scale       SPARK_GRAFT_SCALE_PROBE=1 pytest tests/test_scale_probe.py
               — measured ~10x scaling-ratio bounds + IVF recall floors
-  promotions  scripts/check_promotions.py --promoted — the DRIVER_PRIORITY
-              head at BOTH sf0.001 and sf0.01 (what the driver will run)
+  promotions  scripts/check_promotions.py --promoted — the driver's check
+              window (first 50 of queries(): every query changed since
+              its last green driver row, then the oldest green rows) at
+              BOTH sf0.001 and sf0.01 (what the driver will run)
   determinism scripts/determinism_sweep.py — every oracled query
               hash-identical under 3 shuffle-partition/AQE configs
               (partition-order-stability, mechanically)
   bench       python bench.py — the sf0.1 headline recording (one JSON
               line; pass/fail is exit code + parseable output only;
-              self-qualifying idle gate since r11)
+              self-qualifying idle gate)
 
 Usage:
     python scripts/verify_all.py              # everything (~25-35 min)

@@ -28,6 +28,9 @@ before joins where possible, no driver-side loops anywhere.
 
 from __future__ import annotations
 
+import functools
+import json
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -35,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from spreadsheet_etl_engine_spark import checkwindow
 from spreadsheet_etl_engine_spark.functions.numeric import finite_or_fail
 from spreadsheet_etl_engine_spark.plans.parser import parse_mapping
 from spreadsheet_etl_engine_spark.plans.runner import run_mapping
@@ -2300,505 +2304,33 @@ def get(name: str) -> RegisteredQuery:
     return REGISTRY[name]
 
 
-# The driver verifies the FIRST 50 entries of ``queries()`` (dict insertion
-# order) against the DuckDB oracles each round.  Registration order is a
-# module-import accident, so the driver-facing order is pinned explicitly:
-# the reference-parity DSL surface and the LLM-pipeline [EXT] operators
-# (dedup / similarity / text / multimodal / streaming) — the queries that
-# must never silently lose verification — come first, then one
-# representative per relational family.  Everything past slot 50 was
-# hash-verified by the driver in an earlier round and is byte-unchanged
-# (pinned by the tail fingerprint guard).
-#
-# r7 rotation (the r6 verdict's item 1 — finish attesting the whole
-# registry): ALL 16 remaining unattested queries promoted — the 8 r5
-# residuals that were never driver-verified (dsl_csv_roundtrip,
-# scan_partition_pruned, dsl_v2_distinct, sample_cap_per_source,
-# text_encoding_quality, text_tfidf_top_terms, text_collocations_pmi,
-# events_value_outliers) plus the 8 r6 edge-fix re-pins whose current
-# bytes had never earned a driver row (agg_moments, sample_hash,
-# sample_stratified, dedup_simhash, dedup_simhash_pairs,
-# events_sessionize, and the overlap pair events_value_outliers /
-# text_collocations_pmi already counted above) — 14 distinct names, every
-# one green through scripts/check_promotions.py at BOTH sf0.001 and
-# sf0.01 before taking a slot.  Displaced: 14 entries freshly verified in
-# r6 and byte-unchanged since (dsl_xlsx_roundtrip, dsl_json_source,
-# dsl_orc_roundtrip, dedup_minhash_signature, dedup_components,
-# dedup_embedding_neardup, text_repetition, text_contamination,
-# train_split_assign, mix_weights_by_source, events_funnel,
-# events_cohort_retention, window_distribution, join_full_outer).  After
-# this round's driver run the never-driver-verified count is 0 and every
-# query's current bytes carry a driver row from r6 or r7.
-#
-# r7 code changes forcing head slots this round: dedup_paragraphs (keep-
-# first de-skewed to min(struct) agg), train_pack_sequences (oracle
-# gained the NULL-text coalesce), join_skew_salted (salted_join mode
-# aliases), dsl_fidelity_strings (fidelity fill hoisted to a shared
-# helper + oracle NULL→'' coalesce) — all already head entries.
-#
-# r7 registry growth: ONE new query (scan_zorder_pruned — the r6 stretch
-# item turning the z-order plan/pruning tests into driver-attested
-# end-to-end evidence), taking the slot of events_resample_gapfill
-# (green r6, byte-unchanged).  New surface (1) ≤ first-time driver
-# verifications (15), per the standing growth rule.
-#
-# Mid-r7 swap: a full-registry sweep against edge-augmented fixture
-# tables (tests/test_edge_parity.py's planted NULL/tie rows) exposed
-# six parity-blind defects; the three whose queries sat in the tail
-# (text_fingerprint: NULL-text bow_fp; events_tumbling_window /
-# events_sliding_window: oracle NULL-ts filters) promoted per the
-# rotation guard, displacing dedup_keep_best, events_mode_per_user and
-# agg_corr_covar (all green r6, byte-unchanged).  The other three fixes
-# (events_sessionize/transitions, text_quality_rank twins,
-# agg_linear_fit + streaming oracles) were already head entries.
-#
-# Second mid-r7 swap: the config-portability hardening (token_count
-# family NULL-guarded against spark.sql.legacy.sizeOfNull's -1) edited
-# the train_split_assign and mix_weights_by_source query fns right
-# after their demotion, so they return to the head per the rotation
-# guard; profile_key_skew and scan_schema_evolution (green r6,
-# byte-unchanged) take the tail slots instead.  Two TAIL queries also
-# execute the edited helpers (text_stats, text_quality via
-# token_count/type_count): their outputs are byte-unchanged under the
-# default ANSI config the driver runs (the guard is a no-op for
-# non-NULL text, and driver data has no NULL texts) — both join the r8
-# promotion queue for attestation at current bytes, and the new
-# shared-module hash tripwire in driver_tail_snapshot.json makes any
-# future helper edit fail loud instead of riding unnoticed.
-#
-# r8 rotation: text_stats and text_quality promoted (the r7 queue — the
-# last two queries whose current helper bytes lack a driver row), plus
-# ONE new query (dedup_index_probe: the persisted-index continuous-
-# ingestion shape, write index → probe → partition-append → re-probe,
-# turning the pytest-only parquet round-trip into driver-attested
-# end-to-end evidence — r7 verdict item 5).  Three byte-unchanged r7
-# greens demoted to make room: dsl_csv_roundtrip, sample_cap_per_source,
-# sample_hash.  r8 code changes forcing re-attestation, all already
-# head entries: the four dsl_v2_* queries (extensions.py right-join
-# fidelity fill + natural-key collision coalesce, per ADVICE).  New
-# surface (1) ≤ first-time driver verifications (3), per the standing
-# growth rule.
-#
-# r9 rotation — the FRESHNESS pass (r8 verdict item 3, widened): with
-# every query already attested at current bytes and almost the whole r8
-# head byte-unchanged-green, the stale tail is the only attestation debt
-# left.  42 queries' newest driver rows dated r2–r5 (computed from the
-# CORRECTNESS_r01–r08 union: 8 from r2, 13 from r3, 6 from r4, 15 from
-# r5) — ALL of them promoted this round, so after the r9 driver run no
-# query's newest row predates r6.  Plus this round's forced
-# re-verifications (changed bytes): agg_corr_covar + agg_linear_fit
-# (oracle decimal(19,2) product widening — the family-7 DuckDB int64
-# overflow fix), events_resample_gapfill (cap fencepost: guard fires at
-# span >= cap), dsl_csv_roundtrip + dsl_orc_roundtrip (read_csv/read_orc
-# gained the explicit-schema parameter).  dsl_flagship, dsl_workbook_job
-# and multimodal_decode keep seats as the reference-surface/EXT
-# sentinels.  Displaced: the rest of the r8 head — all green r8 at
-# current bytes and byte-unchanged since (pinned by the tail fingerprint
-# + shared-module hash tripwire).  Every promoted name green through
-# scripts/check_promotions.py at BOTH sf0.001 and sf0.01 before taking
-# a slot.  New surface (0) ≤ first-time verifications, growth rule moot.
-#
-# Third mid-r9 swap (edge family 9, non-finite measures): Spark's ANSI
-# decimal cast silently NULLs NaN/±Infinity (throws only on finite
-# overflow), so every deterministic-decimal-sum path gained the
-# finite_or_fail guard (functions/numeric.py) — 13 queries' engine
-# bytes changed.  Six already hold seats (join_dims_broadcast,
-# window_running_sum, agg_corr_covar, agg_linear_fit,
-# events_rolling_window, events_resample_gapfill); the other seven
-# promote per the rotation guard: events_tumbling_window,
-# join_skew_salted, agg_moments, events_value_outliers,
-# embedding_cluster_stats, dsl_v2_join_agg, streaming_tumbling_counts.
-# Ceded seats: seven byte-unchanged r5-vintage freshness promotions
-# (dsl_a1_formula, dsl_formula_chain, reshape_unpivot, etl_upsert,
-# agg_rollup, agg_quantiles, join_asof) — they lead the r10 freshness
-# queue with the four set ops listed below; deferring freshness beats
-# deferring a changed-bytes re-verification, which the budget invariant
-# makes mandatory.
-#
-# Fourth mid-r9 swap (review pass over sources/ + streaming/): the
-# fail-loud reader/sink hardening changed executed bytes for four tail
-# queries, which promote per the rotation guard: dsl_json_source
-# (read_json FAILFAST-with-schema default), dsl_xlsx_roundtrip +
-# dsl_workbook_job (xlsx sinks now RAISE past Excel's 1,048,575 data
-# rows instead of silently truncating), streaming_view_click_join
-# (read_event_stream construction-time schema validation).  Ceded
-# seats, all byte-unchanged greens, joining the r10 freshness queue:
-# dedup_minhash_lsh_pairs (r5), dedup_embedding_lsh_pairs (r4),
-# text_langid (r4), text_wordcount_top (r4).  load_table also changed
-# (the nanosAsLong conf is now scoped to the events read, restored
-# after — behavior-neutral for every fixture table, proven by the full
-# local parity gate both SFs run).
-#
-# Fifth mid-r9 swap (re-execution review): asof_join reworked to carry
-# the matched right row as ONE struct with a total tie order (per-column
-# last(ignorenulls) could stitch columns from different tied right rows,
-# and the untied order flipped under task retry) — join_asof promotes to
-# re-verify, ceding dedup_exact's seat (byte-unchanged r4 green, r10
-# freshness queue).  Audited, no promotion needed: salted_join's salt is
-# now a deterministic row hash (results provably identical — the
-# equality-vs-plain-join test), connected_components gained an optional
-# reliable checkpoint_dir (default path result-identical, equivalence
-# pytest-pinned), and parse_mapping_v2's new limit-requires-sort raise
-# changes no passing mapping's behavior.
-#
-# r9c registry growth: ONE new query (quality_nonfinite_report — the
-# diagnostic companion to the new NON_FINITE_MEASURE contract: per-
-# column NaN/±inf/NULL/finite counts over the measure columns and the
-# embedding vectors, one single-scan combinable agg per table), taking
-# the seat of sort_topk (green r5, byte-unchanged, joins the r10
-# freshness queue).  New surface (1) ≤ first-time driver verifications
-# (1 — the query itself), per the standing growth rule.
-# r12 rotation (r11 verdict items 1 + 6): the five rows-only
-# approximate queries re-attest through the head — their newest driver
-# rows (r8/r5/r3) were the stalest evidence in the ledger while the
-# oracled floor sat at r9.  Plus the three r12 growth queries (all
-# judge-directed: dedup_semantic = r11 Next 2, the two streaming-dedup
-# rows = r11 Next 7; first-time driver verifications (3) >= new
-# surface (3), the standing growth rule), this round's changed-bytes
-# re-verifications, all 19 r9-vintage oracled rows, and the 20
-# alphabetically-first r10 rows as freshness fillers — after the r12
-# run the newest-green floor moves to r10.  Shared-module audit for
-# the round's edits: similarity.py's _cosine_to_centroids empty-batch
-# guard executes only under similarity_topk_ivf (promoted) and
-# dedup_semantic (new); dedup.py gained semantic_dedup as a PURE
-# ADDITION (no existing query's executed bytes changed); ext_queries'
-# multimodal edits re-attest via both multimodal rows below;
-# jobs.py's bare-dir probe logging re-attests via dsl_workbook_job.
-#
-# --- prior (r11) head rationale, kept for the audit trail ---
-# r11 rotation (r10 verdict item 3): keep the freshness treadmill
-# moving — the 11 queries whose newest driver row is r6-r7 (computed
-# from the CORRECTNESS_r01-r10 union) take head seats so nothing older
-# than r8 remains after the r11 driver run.  Plus the r11 growth query
-# (streaming_stateful_totals — the one streaming surface with no driver
-# attestation, r10 verdict item 2) and this round's changed-bytes
-# re-verifications.
-#
-# --- prior (r10) head rationale, kept for the audit trail ---
-# r10 rotation - FINISH the freshness pass (r9 verdict item 1): the 23
-# queries whose newest driver row still predates r6 (computed from the
-# CORRECTNESS_r01-r09 union: 4 from r2, 7 from r3, 4 from r4, 8 from
-# r5) all take head seats, so after the r10 driver run NO query's
-# newest row predates r6.  Plus that round's forced re-verifications
-# (changed bytes, r9 ADVICE fixes + verdict item 5):
-#   * join_asof - asof_join forward order pinned desc_nulls_first (a
-#     NULL left timestamp now matches nothing in either direction);
-#   * dedup_components + curation_pipeline_decisions -
-#     connected_components' reliable mode reworked from the session-
-#     global setCheckpointDir mutation to explicit parquet round-trips
-#     with superseded-round deletion, and plumbed through the session
-#     conf key spark.spreadsheet_etl.checkpoint.dir (default path
-#     result-identical, equivalence pytest-pinned); then rerouted
-#     through duplicate_clusters (r10 late): identical-signature docs
-#     collapse to a min-id representative BEFORE the band self-join, so
-#     a mega-duplicate cluster costs O(m) star edges instead of O(m^2)
-#     pairs — result-identical (clique-contraction proof + equivalence
-#     test in operators/dedup.py), oracles unchanged;
-#   * streaming_tumbling_counts / streaming_session_counts /
-#     streaming_view_click_join - read_event_stream's validation probe
-#     now swallows ONLY PATH_NOT_FOUND/UNABLE_TO_INFER_SCHEMA instead
-#     of every exception (valid-input behavior identical).
-# Displaced: the r9 head - all green r9 at current bytes and
-# byte-unchanged since (pinned by the tail fingerprint + shared-module
-# hash tripwire + the full local parity gate).  The ~21 unlisted head
-# slots fill by registration order (_ordered_names), and every name
-# entering the 50-slot head goes through scripts/check_promotions.py
-# at BOTH sf0.001 and sf0.01 before the round's driver run.
-#
-# r13 rotation (r12 verdict Next 1-3): ONE new query
-# (streaming_dedup_fuzzy — MinHash-band-keyed applyInPandasWithState
-# candidate pairs, the fuzzy streaming dedup the r12 verdict directed;
-# first-time driver verifications (1) >= new surface (1), the standing
-# growth rule), the two multimodal rows re-attesting the round's
-# fixture extension (synth_media now cycles baseline+progressive JPEG
-# image rows, every uncompressed WAV sample format — incl. the RIFF
-# pad byte in the size formula, the r12 ADVICE fix under the driver
-# hash — and animated-GIF / multi-page-TIFF(G4|LZW+pred|tiled) video
-# rows; entropy containers pin via probe dims + REAL frame/page counts
-# + resize/feature kernels, closed-form containers keep exact byte
-# sizes — r12 verdict Next 1), then ALL 25 queries whose newest green
-# is r10 and the 22 alphabetically-first r11 rows as freshness fillers
-# — after the r13 run the newest-green floor moves to r11 with only 25
-# r11 rows left for r14.  Shared-module audit for the round's edits:
-# media_codecs' sniff-BigTIFF/WAV-pad/PCM24 ADVICE fixes and
-# multimodal's solid-color-GIF resize pad execute only under the two
-# multimodal rows (promoted); streaming/dedup.py gained
-# band_candidates_stream as a PURE ADDITION — dedup_within_watermark
-# and seen_index_stream bytes are unchanged (module docstring + new
-# function only), so streaming_dedup_events / streaming_seen_index
-# ride their r12 rows per the additive-module rule.
-# r14 rotation (r13 verdict Next 1, 2, 4): ONE new query late-round
-# (similarity_topk_pq — growth rule: 1 new = 1 first-time driver
-# verification; the round's other new surface — the IMA/MS ADPCM WAV
-# block codecs plus the Sun AU and AIFF containers — rides the two
-# existing multimodal rows).  The two multimodal rows re-attest
-# CHANGED BYTES: synth_media's audio sub-cycle widened from %7 to %11
-# (STEREO IMA ADPCM at 7 and MS ADPCM at 8 with 64-byte blocks and
-# fact-chunk truncation, AU mu-law at 9, stereo AIFF at 10), which
-# moves every audio row's sample format AND byte size, and
-# multimodal_decode's oracle gained the whole-block ADPCM size
-# formulas (60 + 64*ceil(ns/57) / 90 + 64*ceil(ns/52)) plus the AU
-# (24 + ns) and AIFF (54 + 4*ns) formulas — so the new codecs sit
-# under the driver hash, not just pytest (the r13 verdict's ADPCM
-# 'Done' condition).  [note corrected r15 per the r14 ADVICE: the
-# original text predated the stereo/AU/AIFF and PQ late-round edits]  Shared-module audit for the round's other edits:
-# media_codecs' G.711 frame-divisibility fix (r13 ADVICE) and the
-# ADPCM decoders execute only under the two multimodal rows
-# (promoted); review pass 10 changed plans/extensions.py (v2 _sort:
-# key validation + parse-time _having:), which executes under the four
-# dsl_v2_* queries — green-path outputs are provably unchanged (the
-# error-channel change only affects failing specs, and all four passed
-# the two-scale parity gate at current bytes), but per the standing
-# invariant changed-code queries take head seats over freshness
-# fillers, so they are promoted below.  Then ALL 25 queries whose
-# newest green is r11 — the entire remaining oldest vintage, so after
-# the r14 run the newest-green floor moves to r12 (verdict Next 1) —
-# and the 19 alphabetically-first r12 rows as freshness fillers (the
-# four filler seats the dsl_v2_* promotions took — dsl_filter_ops,
-# dsl_flagship, dsl_formula_chain, dsl_json_source — lead the r15
-# freshness queue with the other r12 rows).  Every name below went
-# through scripts/check_promotions.py at sf0.001 + sf0.01.
-# r15 rotation (r14 verdict Next 1, 2, 5): ONE new query
-# (similarity_topk_ivfpq — the composed IVF-ADC ANN the r14 verdict
-# directed; growth rule: 1 new = 1 first-time driver verification),
-# the round's changed-bytes re-verifications, then the ENTIRE r12
-# vintage (30 rows — after the r15 run the newest-green floor moves to
-# r13, verdict Next 1) and the 14 alphabetically-first r13 rows as
-# freshness fillers.  Shared-module audit for the r15 edits:
-# media_codecs took the two r14 ADVICE decoder fixes (MS ADPCM
-# truncate-toward-zero predictor; whole-chunk scan honoring
-# fact-after-data) — executed only under the two multimodal rows
-# (promoted).  Review pass 11 changed similarity.py (named
-# codebook/dimension validation, NULL-safe centroid kernels, the PQ
-# k-means factored into _pq_kmeans_codebooks with an identical rng
-# call sequence) and vectors.py (hyperplane_signature NULL-out,
-# cosine_pandas NULL/empty-batch guards): executed under
-# similarity_topk_pq / dedup_semantic (assign_centroid) /
-# dedup_embedding_lsh_pairs (hyperplane_signature) — all promoted —
-# and similarity_topk_ivf / similarity_topk_bruteforce, which hold
-# r12-freshness seats anyway.  Riders on changed modules whose
-# EXECUTED functions are byte-unchanged: dedup_embedding_neardup
-# (embedding_neardup_pairs without planes — only dot_precast/
-# to_double, untouched; it also takes an r13 filler seat below) and
-# embedding_cluster_stats (pure expressions, no SIM/VEC calls).
-# ext_queries.py's change is the new registration block plus this
-# round's promoted rows only.  Late-round pass-13 edits: media_codecs
-# decode_au/decode_aiff gained named truncation/zero-rate rejections,
-# media_codecs gained WAVE_FORMAT_EXTENSIBLE decode/encode, AU a-law
-# (27), and AIFC sowt, and synth_media's audio sub-cycle widened %11 →
-# %12 (stereo extensible PCM16 at 11, size 68 + 4*ns) so the
-# fmt-0xFFFE/KSDATAFORMAT parse sits under the driver hash — every
-# audio row's format/size moves, re-attested by the promoted
-# multimodal rows (check_promotions re-run green both SFs)
-# — and dedup.py's embedding_lsh_pairs
-# hoisted its norm fold above the band explode (result-identical,
-# bands× less fold work; executed by dedup_embedding_lsh_pairs,
-# promoted — every other dedup query executes byte-unchanged functions
-# of the module and rides per the established rider rule).
-# r15 continuation: similarity.py's coarse-quantizer default moved to
-# train_centroids_sample — bounded-sample spherical k-means off the
-# SAME hash-ordered collect the PQ trainer uses (FAISS discipline:
-# faiss trains IVF centroids on a sample, not the corpus), replacing
-# the MLlib k-means|| fit whose multi-job cost was ~80% of both ANN
-# bench lines; MLlib stays the kmeans=True/"mllib" opt-in and the
-# explicit-kmeans pytest pins are unchanged.  Executes under
-# similarity_topk_ivf and similarity_topk_ivfpq (both head-seated
-# above; recall re-measured 0.88-0.96 in-query at both SFs, the
-# ivfpq pytest recall/determinism/precomputed-path gates green, 10x
-# scale probe re-run drained).  topk_pq / topk_bruteforce /
-# assign_centroid bytes unchanged — their queries ride.
-# r15 continuation 2: AVI — the real RIFF video container
-# (functions/avi_codec.py: DIB + Motion-JPEG mux/demux, O(header) dim
-# probe, O(chunk-headers) movi frame walk, indices-only sampled
-# decode) — joined the codec layer, and synth_media's VIDEO sub-cycle
-# widened %3 → %5 (AVI-DIB at 3 with the closed-form size
-# 232 + nf*(24 + h*((3w+3)//4*4)) in the oracle's sized_bytes pin,
-# AVI-MJPEG at 4 pinned via probe dims + the frame walk).  Every
-# video row's container assignment moves, re-attested by the two
-# promoted multimodal rows (check_promotions green both SFs).
-# extract_features/resize_images/decode_sampled_frames gained avi
-# branches executing ONLY under those two rows.
-# r15 OPTIMIZATION round shared-module audit (all result-identical,
-# perf-only; every query executing changed bytes holds a head seat):
-# streaming/dedup.py — band_candidates_stream state re-packed into
-# bounded hash groups (streaming_dedup_fuzzy, promoted into the
-# changed-bytes block) and seen_index_stream likewise
-# (streaming_seen_index, r12-freshness seat); dedup_within_watermark
-# byte-unchanged (streaming_dedup_events rides its freshness seat).
-# operators/dedup.py — semantic_dedup gained the salted prune join
-# (dedup_semantic, changed-bytes seat) and connected_components folded
-# its convergence check into the round join (dedup_components +
-# curation_pipeline_decisions, filler seats); every other function in
-# the module is byte-unchanged (rider rule).  session.py — worker
-# daemon module + PYTHONPATH only (no query semantics; all outputs
-# byte-identical, re-pinned in the tail snapshot).  registry.py — this
-# comment and the DRIVER_PRIORITY list only.
-# r15 continuation 3 (review pass 15, sources/xlsx_native.py): the
-# xlsx READ path gained Excel-grid-cap guards (hostile r=/cell refs
-# were an unbounded-allocation path), range-checked shared-string
-# indexes (a negative index silently read the LAST entry via
-# Python's end-relative lookup), and container-error normalization
-# (BadZipFile/ParseError/KeyError → named ValueError).  Executes
-# under dsl_workbook_job (already head-seated above) and
-# dsl_xlsx_roundtrip — promoted below per the changed-code-over-
-# fillers invariant, displacing the dedup_simhash filler to the r16
-# queue.  The write path is byte-unchanged.
-# r15 continuation 4 (review pass 16, sources/writers.py): zorder_key
-# excludes ±Inf from the auto-range (a single Inf row collapsed the
-# dimension into constant bits — the NaN fix's other door) and the
-# degenerate guard now rejects non-finite caller ranges;
-# write_zordered uniquifies its helper-key name (a user column named
-# _zkey was silently overwritten and DROPPED from the files).
-# Executes under scan_zorder_pruned — promoted below, displacing the
-# dedup_paragraphs filler to the r16 queue.  All other writers are
-# byte-unchanged riders.
-# r15 continuation 5: avi_codec gained the interleaved PCM16 'auds'
-# stream (encode_avi(audio=) / decode_avi_audio / has_avi_audio) — a
-# PURE ADDITION: the no-audio encoder byte layout is unchanged
-# (closed-form + promotion gate re-verified green both SFs), the
-# fixture carries no audio tracks, and no registry query executes the
-# new functions (pytest round-trip pins only, like codec internals).
-# The two multimodal rows ride their promoted seats.  Late follow-up:
-# decode_avi now honors negative-biHeight top-down DIB row order (was
-# silently flipped; hand-built twin pinned) — same promoted rows
-# re-gated green both SFs.
-# r16 OPTIMIZATION round rotation audit (changed modules → which
-# queries re-verify in the r16 window):
-# * operators/similarity.py — k-means++ seeding batched across
-#   subspaces + batched float32 Lloyd (_kmeanspp_seed_batched /
-#   _pq_kmeans_codebooks): codebooks/centroids CHANGE (rows-only
-#   approximate queries; recall floors + determinism pytest-pinned).
-#   Executors: similarity_topk_pq, similarity_topk_ivfpq,
-#   similarity_topk_ivf (sample trainer) — all seated in the head;
-#   similarity_topk_bruteforce executes only untouched kernels and
-#   keeps its head seat anyway; dedup_semantic uses assign_centroid
-#   (byte-unchanged) with PINNED Forgy centroids, output unchanged.
-# * operators/dedup.py — connected_components round restructured
-#   (union+min fold, observed convergence flag, sym pre-partitioned)
-#   and semantic_dedup's base repartition made conditional: outputs
-#   provably unchanged (equivalence pins), re-verified via
-#   dedup_components, curation_pipeline_decisions, dedup_semantic —
-#   all in the head.  No tail query calls either function.
-# * streaming/dedup.py — state_groups now conf-resolved (default
-#   unchanged at 256) + stream_state_partitions helper: emitted rows
-#   unchanged; streaming_dedup_fuzzy / streaming_seen_index fn bytes
-#   changed (scale-governed partitioning) and sit in the head;
-#   streaming_dedup_events executes only byte-unchanged
-#   dedup_within_watermark and keeps its head seat.
-# * session.py — daemon-module conf now local-master-gated (r15
-#   ADVICE): engine-wide wiring, no per-query output change.
-DRIVER_PRIORITY: tuple[str, ...] = (
-    # --- single-pass job lifecycle changed bytes: the fidelity DIRECT
-    # header lookup (plans/compiler.py), the RFC 4180 quote escape in
-    # read_csv/write_csv, and read_excel's grid -> frame step (now
-    # sources.readers.sheet_frame).  Typed-mode compiles are
-    # byte-unchanged, so dsl_a1_formula, dsl_a1_forward and the
-    # dsl_v2_* rows ride.  jobs.py's changes run under dsl_workbook_job
-    # (already seated).  The last three r15 fillers make room. ---
-    "dsl_fidelity_strings",
-    "dsl_csv_roundtrip",
-    "dsl_xlsx_roundtrip",
-    # --- r16 changed-bytes re-verifications (audit above) ---
-    "similarity_topk_ivfpq",
-    "multimodal_decode",
-    "similarity_topk_pq",
-    "dedup_semantic",
-    "dedup_embedding_lsh_pairs",
-    # --- r16 freshness: the r15 comment's queue leaders take the
-    # seats of three stable green-r15 rows (multimodal_resize_features,
-    # dsl_xlsx_roundtrip, scan_zorder_pruned — all byte-unchanged since
-    # their r15 verification) ---
-    "dedup_ngram_jaccard_pairs",
-    "dedup_paragraphs",
-    "dedup_simhash",
-    # --- r15 optimization round changed-bytes re-verification:
-    # band_candidates_stream's state re-packed into bounded hash groups
-    # (streaming/dedup.py; pair set pinned identical to batch LSH) —
-    # the module's other two operators are byte-unchanged and their
-    # queries hold freshness seats below anyway.  dedup_semantic
-    # (salted prune) and dedup_components + curation_pipeline_decisions
-    # (in-join convergence flag) already hold seats above/below. ---
-    "streaming_dedup_fuzzy",
-    # --- r15 freshness: ALL 30 queries whose newest driver row is
-    # r12, byte-unchanged since (tail fingerprint + shared-module hash
-    # tripwire; similarity_topk_ivf/_bruteforce ALSO execute this
-    # round's similarity.py edits) — clearing this vintage moves the
-    # floor to r13 ---
-    "dsl_direct_constant",
-    "dsl_filter_ops",
-    "dsl_flagship",
-    "dsl_formula_chain",
-    "dsl_json_source",
-    "dsl_orc_roundtrip",
-    "dsl_workbook_job",
-    "events_rolling_window",
-    "events_sessionize",
-    "events_tumbling_window",
-    "join_range_window",
-    "join_skew_salted",
-    "quality_nonfinite_report",
-    "scalar_datetime",
-    "scalar_string_math",
-    "similarity_topk_bruteforce",
-    "similarity_topk_ivf",
-    "streaming_dedup_events",
-    "streaming_seen_index",
-    "text_encoding_quality",
-    "text_quality",
-    "text_quality_rank_approx",
-    "text_stats",
-    "train_pack_sequences",
-    "window_distribution",
-    "window_first_last",
-    "window_lag_lead",
-    "window_rank_orders",
-    "window_rank_variants",
-    "window_running_sum",
-    # --- r15 filler rotation: the alphabetically-first r13 rows
-    # (the oldest remaining vintage), byte-unchanged since their green
-    # row; the remaining r13 rows lead the r16 freshness queue
-    # (dedup_ngram_jaccard_pairs gave its seat to the optimization
-    # round's streaming_dedup_fuzzy changed-bytes re-verification
-    # above — changed code outranks freshness per the standing
-    # invariant; it joins dedup_paragraphs/dedup_simhash at the front
-    # of the r16 queue) ---
-    "agg_corr_covar",
-    "agg_histogram",
-    "agg_linear_fit",
-    "agg_moments",
-    "curation_pipeline_decisions",
-    "dedup_components",
-    "dedup_embedding_neardup",
-    "dedup_incremental",
-)
-
+# The driver verifies the first DRIVER_CHECK_BUDGET entries of
+# ``queries()`` against the DuckDB oracles each round; the rest ride on
+# their last green driver row.  ``checkwindow`` derives that order from
+# query fingerprints and verified.json (written by
+# scripts/update_verified.py), so every query changed since its green
+# row sits inside the budget.
 DRIVER_CHECK_BUDGET = 50
+_VERIFIED = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "verified.json")
 
 
-def _ordered_names() -> list[str]:
-    # A priority name that is not registered is a typo or a query that was
-    # deleted without updating the list — either way the driver would
-    # silently verify something other than what the list promises, so
-    # fail loudly instead of filtering (round-3 lesson: four phantom
-    # names sat here for a whole round).
-    unknown = [n for n in DRIVER_PRIORITY if n not in REGISTRY]
-    if unknown:
-        raise LookupError(
-            f"DRIVER_PRIORITY names not in REGISTRY: {unknown}; "
-            "implement them or remove them from the list"
-        )
-    tail = [n for n in REGISTRY if n not in DRIVER_PRIORITY]
-    return list(DRIVER_PRIORITY) + tail
+@functools.cache
+def _check_order() -> tuple[str, ...]:
+    with open(_VERIFIED) as f:
+        verified = json.load(f)
+    current = {n: checkwindow.fingerprint(rq.fn, rq.oracle) for n, rq in REGISTRY.items()}
+    return tuple(checkwindow.check_order(current, verified, DRIVER_CHECK_BUDGET))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: REGISTRY[name].fn for name in _ordered_names()}
+    return {name: REGISTRY[name].fn for name in _check_order()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
         name: REGISTRY[name].oracle
-        for name in _ordered_names()
+        for name in _check_order()
         if REGISTRY[name].oracle is not None
     }
 

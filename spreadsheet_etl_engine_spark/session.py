@@ -41,12 +41,14 @@ def get_spark(
     # The effective master decides below whether the custom worker
     # daemon is safe to wire up: the module only resolves through the
     # DRIVER-side PYTHONPATH mutation above, which executors on a real
-    # cluster never see (r15 ADVICE) — there the stock daemon runs and
-    # the zip-path cost returns until the module is shipped via
-    # spark.submit.pyFiles + spark.executorEnv.PYTHONPATH by the
-    # launcher, which owns deployment-specific file distribution.
+    # cluster never see — there the stock daemon runs and the zip-path
+    # cost returns until the module is shipped via spark.submit.pyFiles
+    # + spark.executorEnv.PYTHONPATH by the launcher, which owns
+    # deployment-specific file distribution.  extra_conf is applied last,
+    # so its spark.master wins over the default and must be consulted.
     effective_master = (
         master
+        or (extra_conf or {}).get("spark.master")
         or os.environ.get("MASTER")
         or os.environ.get("SPARK_MASTER")
         or f"local[{cpus}]"
@@ -74,12 +76,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     if effective_master.startswith("local"):
-        # r15 optimization round: fork Python workers without the
-        # pyspark.zip/py4j zip path entries (see pydaemon module
-        # docstring — CPython 3.11 eagerly re-reads the whole zip
-        # central directory per task via importlib.invalidate_caches;
-        # measured ~0.29 s of worker CPU per task start, guide §4).
-        # local-master only (r16, ADVICE): see effective_master above.
+        # Fork Python workers without the pyspark.zip/py4j zip path
+        # entries (see pydaemon module docstring — CPython 3.11 eagerly
+        # re-reads the whole zip central directory per task via
+        # importlib.invalidate_caches; measured ~0.29 s of worker CPU per
+        # task start).  Local master only: see effective_master above.
         builder = builder.config(
             "spark.python.daemon.module", "spark_graft_pydaemon")
     if master is not None:

@@ -6,11 +6,16 @@ names + exact values, order-insensitive).  Run at sf0.001 by default
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import duckdb
 import pandas as pd
 import pytest
 
-from spreadsheet_etl_engine_spark import registry
+from spreadsheet_etl_engine_spark import checkwindow, registry
 from spreadsheet_etl_engine_spark.sources.readers import TABLE_NAMES
 
 
@@ -79,100 +84,70 @@ def test_entry_contract(spark):
     assert len(qs) >= 10
 
 
-# Queries the driver MUST re-verify this round — the invariant behind
-# this list (round-2 verdict lesson: queries silently fell past the
-# driver's 50-entry check budget when extras were registered ahead of
-# them) is "anything whose code or oracle changed since its last driver
-# row sits inside the budget", plus the flagship sentinels.  Earlier
-# rounds also parked the whole DSL/[EXT] surface here while it was
-# earning first-time rows; since r8 every query is attested at current
-# bytes and byte-pinned by the tail snapshot guard below, so the head
-# spends its slots on the FRESHNESS rotation (r9 rotated 42 stale rows,
-# r10 rotates the remaining 23 — see the DRIVER_PRIORITY comment) plus
-# the entries with a hard changed-bytes re-verification reason.
-MUST_BE_IN_CHECK_BUDGET = [
-    # r16 optimization round changed bytes — must re-verify (full
-    # audit in the registry.py rotation comment):
-    # similarity.py's PQ/IVF trainer was batched+vectorized, so the
-    # rows-only ANN outputs CHANGE (recall floors + determinism
-    # pytest-pinned):
-    "similarity_topk_pq",
-    "similarity_topk_ivfpq",
-    "similarity_topk_ivf",
-    # operators/dedup.py: connected_components round fold + observed
-    # convergence flag; semantic_dedup conditional base repartition —
-    # outputs equivalence-pinned unchanged:
-    "dedup_components",
-    "curation_pipeline_decisions",
-    "dedup_semantic",
-    # streaming harnesses now derive the state-shuffle partition count
-    # (scale-governed); emitted rows partitioning-independent:
-    "streaming_dedup_fuzzy",
-    "streaming_seen_index",
-]
+def test_check_order_puts_changed_queries_first():
+    """Changed and never-verified queries lead by name; the rest follow
+    oldest green round first, ties by name."""
+    verified = {
+        "a_same": {"round": 7, "fingerprint": "1"},
+        "b_edited": {"round": 3, "fingerprint": "old"},
+        "c_same": {"round": 2, "fingerprint": "3"},
+        "d_same": {"round": 7, "fingerprint": "4"},
+        "e_same": {"round": 2, "fingerprint": "5"},
+    }
+    current = {"e_same": "5", "d_same": "4", "z_new": "9", "c_same": "3",
+               "b_edited": "new", "a_same": "1"}
+    assert checkwindow.check_order(current, verified, 2) == [
+        "b_edited", "z_new", "c_same", "e_same", "a_same", "d_same"]
+
+
+def test_check_order_fails_past_the_budget():
+    current = {f"q{i}": "new" for i in range(4)}
+    verified = {"q0": {"round": 1, "fingerprint": "old"}}
+    with pytest.raises(ValueError, match=r"4 queries changed.*'q0', 'q1', 'q2', 'q3'"):
+        checkwindow.check_order(current, verified, 3)
 
 
 def test_driver_priority_ordering():
-    """All north-star queries sit inside the driver's check budget, the
-    priority list has no typos (every name registered) and no duplicates,
-    and it never exceeds the budget (extra registrations go to the tail)."""
+    """Every query changed since its last green driver row sits inside the
+    driver's check budget; the order covers exactly the registry; every
+    verified.json name is registered (a stale name is a deleted or renamed
+    query the file still vouches for)."""
+    with open(registry._VERIFIED) as f:
+        verified = json.load(f)
+    unregistered = sorted(set(verified) - set(registry.REGISTRY))
+    assert not unregistered, f"verified.json names not registered: {unregistered}"
+    changed = [n for n, rq in registry.REGISTRY.items()
+               if verified.get(n, {}).get("fingerprint")
+               != checkwindow.fingerprint(rq.fn, rq.oracle)]
+    assert len(changed) <= registry.DRIVER_CHECK_BUDGET, changed
     names = list(registry.queries())
-    head = names[: registry.DRIVER_CHECK_BUDGET]
-    assert len(registry.DRIVER_PRIORITY) == len(set(registry.DRIVER_PRIORITY))
-    # r10 advice fix: duplicates here pad the list and invite
-    # miscounting against the 50-slot budget.
-    assert len(MUST_BE_IN_CHECK_BUDGET) == len(set(MUST_BE_IN_CHECK_BUDGET)), \
-        sorted({n for n in MUST_BE_IN_CHECK_BUDGET
-                if MUST_BE_IN_CHECK_BUDGET.count(n) > 1})
-    assert len(registry.DRIVER_PRIORITY) <= registry.DRIVER_CHECK_BUDGET
-    unregistered = [n for n in registry.DRIVER_PRIORITY if n not in registry.REGISTRY]
-    assert not unregistered, f"priority names not registered: {unregistered}"
-    missing = [n for n in MUST_BE_IN_CHECK_BUDGET if n not in head]
-    assert not missing, f"north-star queries past the driver budget: {missing}"
-    # The tail must still be registered queries (nothing dropped).
     assert sorted(names) == sorted(registry.REGISTRY)
+    head = names[: registry.DRIVER_CHECK_BUDGET]
+    assert not [n for n in changed if n not in head]
 
 
-def test_tail_queries_unchanged():
-    """Rotation guard: queries past the driver's 50-slot check budget ride
-    on a green row earned in an EARLIER round — valid only while their
-    code is untouched.  If this fails: you edited a tail query; promote
-    it into the DRIVER_PRIORITY head (rotate out something stable) so the
-    next round re-verifies it, then run
-    `python scripts/update_tail_snapshot.py`."""
-    import json
-    import os
+def test_registry_import_does_not_fingerprint():
+    """Fingerprinting parses the package source; it waits for the first
+    queries() / oracle_sql() call instead of slowing every import."""
+    code = ("from spreadsheet_etl_engine_spark import checkwindow, registry; "
+            "print(checkwindow._module.cache_info().currsize)")
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                         text=True, check=True, cwd=os.path.dirname(registry._VERIFIED))
+    assert out.stdout.strip() == "0"
 
-    from scripts.update_tail_snapshot import (
-        fingerprint, module_hashes, tail_names,
-    )
 
-    path = os.path.join(os.path.dirname(__file__), "driver_tail_snapshot.json")
-    with open(path) as f:
-        snap = json.load(f)
-    pinned_modules = snap.pop("__modules__", {})
-    changed = sorted(
-        set(k for k, v in module_hashes().items()
-            if pinned_modules.get(k) != v)
-        | set(k for k in pinned_modules if k not in module_hashes())
-    )
-    assert not changed, (
-        f"shared modules changed since the tail snapshot was pinned: "
-        f"{changed}.  The per-query fingerprints cannot see this "
-        "(transitive blind spot): audit which TAIL queries execute the "
-        "changed code, promote those into DRIVER_PRIORITY (or record in "
-        "the rotation comment why their outputs are byte-unchanged), "
-        "then re-pin via scripts/update_tail_snapshot.py"
-    )
-    tail = tail_names()
-    assert sorted(tail) == sorted(snap), (
-        f"tail set changed: new={sorted(set(tail) - set(snap))} "
-        f"gone={sorted(set(snap) - set(tail))}; re-pin via "
-        "scripts/update_tail_snapshot.py (new tail entries must have a "
-        "green driver row from the round that demoted them)"
-    )
-    drifted = [n for n in tail if fingerprint(n) != snap[n]]
-    assert not drifted, (
-        f"tail queries edited since their last driver verification: "
-        f"{drifted}; promote them into DRIVER_PRIORITY and re-pin"
-    )
+def _modules_reached(name):
+    return {mod for mod, _ in checkwindow.closure(registry.get(name).fn)}
+
+
+def test_fingerprint_closure_follows_every_reference_kind():
+    pkg = "spreadsheet_etl_engine_spark"
+    workbook = checkwindow.closure(registry.get("dsl_workbook_job").fn)
+    assert (f"{pkg}.jobs", "run_workbook") in workbook
+    assert (f"{pkg}.sources.xlsx_native", "read_workbook") in workbook
+    # module-alias attribute (DD.connected_components)
+    assert (f"{pkg}.operators.dedup", "connected_components") in \
+        checkwindow.closure(registry.get("dedup_components").fn)
+    # function-local ``from ... import multimodal as MM``
+    assert f"{pkg}.operators.multimodal" in _modules_reached("multimodal_decode")
+    assert f"{pkg}.plans.compiler" not in _modules_reached("set_except")
