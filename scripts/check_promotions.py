@@ -1,14 +1,13 @@
 """Two-SF check-window gate: run the local DuckDB parity test for a set of
 queries at BOTH sf0.001 (the default test scale) and sf0.01 (the scale the
-driver's correctness check runs at), so a query entering the driver's check
-window never discovers an sf-dependent mismatch for the first time in the
-driver run.
+correctness check runs at), so a query entering the check window never
+discovers an sf-dependent mismatch for the first time in the sf0.01 check.
 
 Usage:
     python scripts/check_promotions.py name1 name2 ...
     python scripts/check_promotions.py --promoted   # the first
         # DRIVER_CHECK_BUDGET entries of queries(): every query changed
-        # since its last green driver row, then the oldest green rows
+        # since its last green check row, then the oldest green rows
 
 Exit code 0 = all names pass at both scales.  Queries without an oracle
 run the rows-only check pytest applies to them.
@@ -32,7 +31,7 @@ def main() -> int:
     if not args:
         print(__doc__)
         return 2
-    # --promoted gates what the driver will actually verify.
+    # --promoted gates what the correctness check will actually verify.
     if args == ["--promoted"]:
         names = list(registry.queries())[: registry.DRIVER_CHECK_BUDGET]
     else:
@@ -53,7 +52,7 @@ def main() -> int:
             cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         )
         if rc != 0:
-            print(f"FAILED at {sf} — fix before the driver's next round")
+            print(f"FAILED at {sf} — fix before the next correctness check")
             return rc
     print("check-window gate green at both scales")
     return 0

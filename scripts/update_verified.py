@@ -1,10 +1,10 @@
-"""Record each query's fingerprint at its last green driver row.
+"""Record each query's fingerprint at its last green correctness-check row.
 
 ``verified.json`` (repo root) maps every verified query to
 ``{"round": N, "fingerprint": ...}``; ``registry.queries()`` puts every
-query whose fingerprint now differs inside the driver's check window
+query whose fingerprint now differs inside the check window
 (see ``spreadsheet_etl_engine_spark/checkwindow.py``).  Run this at the
-commit the driver verified, with that round's correctness report; entries
+commit the check verified, with that round's correctness report; entries
 without a newer green row are kept:
 
     python scripts/update_verified.py CORRECTNESS_r17.json

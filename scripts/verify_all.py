@@ -14,10 +14,10 @@ failure so the table is complete):
               all-NULL-column table variants
   scale       SPARK_GRAFT_SCALE_PROBE=1 pytest tests/test_scale_probe.py
               — measured ~10x scaling-ratio bounds + IVF recall floors
-  promotions  scripts/check_promotions.py --promoted — the driver's check
-              window (first 50 of queries(): every query changed since
-              its last green driver row, then the oldest green rows) at
-              BOTH sf0.001 and sf0.01 (what the driver will run)
+  promotions  scripts/check_promotions.py --promoted — the correctness
+              check window (first 50 of queries(): every query changed
+              since its last green check row, then the oldest green rows)
+              at BOTH sf0.001 and sf0.01 (the check runs at sf0.01)
   determinism scripts/determinism_sweep.py — every oracled query
               hash-identical under 3 shuffle-partition/AQE configs
               (partition-order-stability, mechanically)

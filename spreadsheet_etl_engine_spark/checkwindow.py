@@ -1,10 +1,11 @@
-"""Query fingerprints and the driver's check-window order.
+"""Query fingerprints and the correctness check's window order.
 
-The driver re-verifies only the first ``DRIVER_CHECK_BUDGET`` entries of
-``queries()`` against DuckDB each round; every other query rides on its
-last green driver row, recorded in ``verified.json`` as the fingerprint
-the query had then.  A query whose fingerprint differs now must sit in
-that window, so the order is derived rather than kept by hand:
+The sf0.01 correctness check re-verifies only the first
+``DRIVER_CHECK_BUDGET`` entries of ``queries()`` against DuckDB each
+round; every other query rides on its last green check result, recorded
+in ``verified.json`` as the fingerprint the query had then.  A query
+whose fingerprint differs now must sit in that window, so the order is
+derived rather than kept by hand:
 
 * a fingerprint hashes the query function, its oracle SQL and every
   package function, class or module-level assignment the function
@@ -185,16 +186,16 @@ def fingerprint(fn: Callable, oracle: str | None) -> str:
 
 def check_order(current: Mapping[str, str], verified: Mapping[str, dict],
                 budget: int) -> list[str]:
-    """Driver order: queries whose fingerprint differs from their last
+    """Check order: queries whose fingerprint differs from their last
     green row (or that have none) first, by name; then the rest, oldest
     green round first, ties by name.  More changed queries than the
-    driver checks per round would leave some unverified, so that fails."""
+    check covers per round would leave some unverified, so that fails."""
     changed = sorted(n for n, fp in current.items()
                      if verified.get(n, {}).get("fingerprint") != fp)
     if len(changed) > budget:
         raise ValueError(
-            f"{len(changed)} queries changed since their last green driver "
-            f"row, more than the {budget} the driver checks per round: "
+            f"{len(changed)} queries changed since their last green check "
+            f"row, more than the {budget} the check covers per round: "
             f"{changed}")
     rest = sorted((verified[n]["round"], n) for n in current if n not in changed)
     return changed + [n for _, n in rest]

@@ -2304,9 +2304,9 @@ def get(name: str) -> RegisteredQuery:
     return REGISTRY[name]
 
 
-# The driver verifies the first DRIVER_CHECK_BUDGET entries of
+# The correctness check verifies the first DRIVER_CHECK_BUDGET entries of
 # ``queries()`` against the DuckDB oracles each round; the rest ride on
-# their last green driver row.  ``checkwindow`` derives that order from
+# their last green check row.  ``checkwindow`` derives that order from
 # query fingerprints and verified.json (written by
 # scripts/update_verified.py), so every query changed since its green
 # row sits inside the budget.

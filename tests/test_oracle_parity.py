@@ -108,8 +108,8 @@ def test_check_order_fails_past_the_budget():
 
 
 def test_driver_priority_ordering():
-    """Every query changed since its last green driver row sits inside the
-    driver's check budget; the order covers exactly the registry; every
+    """Every query changed since its last green check row sits inside the
+    correctness check's budget; the order covers exactly the registry; every
     verified.json name is registered (a stale name is a deleted or renamed
     query the file still vouches for)."""
     with open(registry._VERIFIED) as f:
