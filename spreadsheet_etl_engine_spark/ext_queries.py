@@ -8,6 +8,8 @@ without an oracle → driver rows-only check.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1367,6 +1369,85 @@ def multimodal_resize_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _scoped_session(
+    spark: SparkSession, shuffle_partitions: int | None = None
+) -> SparkSession:
+    """A ``newSession()`` child of ``spark`` that carries its runtime SQL conf.
+
+    The child shares the SparkContext but has its own SQL conf, temp views
+    and query names, so a stream run in it cannot change the caller's conf
+    or collide with another run on the same session.  ``newSession()``
+    starts from the launch conf, not from values set at runtime, so the
+    caller's modifiable ``spark.sql.*`` entries are copied in;
+    ``shuffle_partitions`` then sets the child's width alone.
+    """
+    child = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if key.startswith("spark.sql.") and spark.conf.isModifiable(key):
+            child.conf.set(key, value)
+    if shuffle_partitions is not None:
+        child.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return child
+
+
+def _replay_stream(
+    spark: SparkSession,
+    frame: DataFrame,
+    read: Callable[..., DataFrame],
+    build: Callable[[Callable[[], DataFrame]], DataFrame],
+    rollup: Callable[[DataFrame], DataFrame],
+    *,
+    output_mode: str,
+    files: int | None = None,
+    per_trigger: int = 8,
+    stateful: bool = False,
+) -> DataFrame:
+    """Replay ``frame`` as a file stream run to ``availableNow`` and return
+    ``rollup`` of what its sink received, as a DataFrame of ``spark``.
+
+    ``frame`` is staged as parquet in ``files`` files (its own partitioning
+    when None).  ``build`` gets an opener: each call is a new
+    ``read(child, staged_dir, max_files_per_trigger=per_trigger)`` stream
+    in a :func:`_scoped_session` child, and it returns the streaming query.
+    The sink follows from the output mode: append writes a parquet file
+    sink read back with the stream's schema, so nothing corpus-sized
+    reaches the driver; complete and update write a memory sink under a
+    per-call name.  A ``stateful`` query runs its child at the width
+    ``SD.stream_state_partitions`` gives for its per-trigger input rows.
+    The rows are collected before the staging directory is removed.
+    """
+    import glob
+    import math
+    import tempfile
+    import uuid
+
+    from spreadsheet_etl_engine_spark.streaming import dedup as SD
+    from spreadsheet_etl_engine_spark.streaming import events as SE
+
+    with tempfile.TemporaryDirectory() as tmp:
+        src = f"{tmp}/in"
+        (frame if files is None else frame.repartition(files)).write.parquet(src)
+        width = None
+        if stateful:
+            triggers = max(1, math.ceil(len(glob.glob(f"{src}/*.parquet")) / per_trigger))
+            rows = spark.read.schema(frame.schema).parquet(src).count()
+            width = SD.stream_state_partitions(spark, rows / triggers)
+        child = _scoped_session(spark, width)
+        stream = build(lambda: read(child, src, max_files_per_trigger=per_trigger))
+        if output_mode == "append":
+            out = f"{tmp}/out"
+            (stream.writeStream.format("parquet").option("path", out)
+             .option("checkpointLocation", f"{tmp}/ckpt")
+             .trigger(availableNow=True).start().awaitTermination())
+            sink = child.read.schema(stream.schema).parquet(out)
+        else:
+            name = f"replay_{uuid.uuid4().hex}"
+            SE.run_to_memory_sink(stream, name, output_mode=output_mode)
+            sink = child.table(name)
+        final = rollup(sink)
+        return spark.createDataFrame(final.collect(), final.schema)
+
+
 @register(
     "streaming_tumbling_counts",
     # availableNow over a static file source is deterministic and complete
@@ -1387,22 +1468,15 @@ def multimodal_resize_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "file source and availableNow trigger; must equal the batch twin.",
 )
 def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from spreadsheet_etl_engine_spark.streaming import events as SE
 
-    ev = load_table(spark, sf_dir, "events")
-    with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/events_in"
-        ev.write.mode("overwrite").parquet(src)
-        stream = SE.read_event_stream(spark, src)
-        name = "streaming_tumbling_counts_sink"
-        SE.run_to_memory_sink(SE.tumbling_counts(stream), name, output_mode="complete")
-        out = spark.table(name)
-        # Materialize before the temp dir disappears.
-        return spark.createDataFrame(
-            out.collect(), out.schema
-        ).withColumn("window_start", F.col("window_start").cast("string"))
+    return _replay_stream(
+        spark, load_table(spark, sf_dir, "events"), SE.read_event_stream,
+        lambda stream: SE.tumbling_counts(stream()),
+        lambda out: out.withColumn(
+            "window_start", F.col("window_start").cast("string")),
+        output_mode="complete",
+    )
 
 
 @register(
@@ -1417,7 +1491,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         -- extend a session (same stance as the funnel's entry filter)
         SELECT user_id, ts, event_id,
                CASE WHEN lag(ts) OVER w IS NULL
-                         -- STRICT > (r9 family-8 find): Spark's session_window
+                         -- STRICT >: Spark's session_window
                          -- MERGES touching windows — an event arriving
                          -- exactly `gap` after the last one extends the
                          -- session (same semantics as Flink's session
@@ -1447,21 +1521,15 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hold back sessions the final watermark hasn't closed.",
 )
 def streaming_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from spreadsheet_etl_engine_spark.streaming import events as SE
 
-    ev = load_table(spark, sf_dir, "events")
-    with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/events_in"
-        ev.write.mode("overwrite").parquet(src)
-        stream = SE.read_event_stream(spark, src)
-        name = "streaming_session_counts_sink"
-        SE.run_to_memory_sink(SE.session_counts(stream), name, output_mode="complete")
-        out = spark.table(name)
-        return spark.createDataFrame(
-            out.collect(), out.schema
-        ).withColumn("session_start", F.col("session_start").cast("string"))
+    return _replay_stream(
+        spark, load_table(spark, sf_dir, "events"), SE.read_event_stream,
+        lambda stream: SE.session_counts(stream()),
+        lambda out: out.withColumn(
+            "session_start", F.col("session_start").cast("string")),
+        output_mode="complete",
+    )
 
 
 @register(
@@ -1488,29 +1556,27 @@ def streaming_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "100 TB/day (streaming/events.py:view_click_attribution).",
 )
 def streaming_view_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from spreadsheet_etl_engine_spark.streaming import events as SE
 
-    ev = load_table(spark, sf_dir, "events")
-    with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/events_in"
-        ev.write.mode("overwrite").parquet(src)
-        views = SE.read_event_stream(spark, src).filter(F.col("event_type") == "view")
-        clicks = SE.read_event_stream(spark, src).filter(F.col("event_type") == "click")
-        # Backfill watermark: file order is event-time-arbitrary, so the
-        # delay must span the replayed window (31 days covers the
-        # fixture's 30-day span) or "late" files silently lose matches —
-        # see view_click_attribution's docstring for the sizing rule.
-        joined = SE.view_click_attribution(views, clicks, watermark="31 days")
-        name = "streaming_view_click_join_sink"
-        SE.run_to_memory_sink(joined, name, output_mode="append")
-        out = spark.table(name)
-        return spark.createDataFrame(out.collect(), out.schema).select(
+    # Backfill watermark: file order is event-time-arbitrary, so the
+    # delay must span the replayed window (31 days covers the fixture's
+    # 30-day span) or "late" files silently lose matches — see
+    # view_click_attribution's docstring for the sizing rule.  Each side
+    # is its own file stream over the staged files.
+    return _replay_stream(
+        spark, load_table(spark, sf_dir, "events"), SE.read_event_stream,
+        lambda stream: SE.view_click_attribution(
+            stream().filter(F.col("event_type") == "view"),
+            stream().filter(F.col("event_type") == "click"),
+            watermark="31 days",
+        ),
+        lambda out: out.select(
             "user_id", "view_id", "click_id",
             F.col("view_ts").cast("string").alias("view_ts"),
             F.col("click_ts").cast("string").alias("click_ts"),
-        )
+        ),
+        output_mode="append",
+    )
 
 
 @register(
@@ -1544,32 +1610,21 @@ def streaming_view_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "once (streaming/events.py:running_user_totals).",
 )
 def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from spreadsheet_etl_engine_spark.streaming import events as SE
 
-    ev = load_table(spark, sf_dir, "events")
-    with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/events_in"
-        # 8 files + 2 per trigger => ~4 micro-batches: the state-restore
-        # path (get/update across batches) is what this row attests.
-        ev.repartition(8).write.mode("overwrite").parquet(src)
-        stream = SE.read_event_stream(spark, src, max_files_per_trigger=2)
-        name = "streaming_stateful_totals_sink"
-        SE.run_to_memory_sink(
-            SE.running_user_totals(stream), name, output_mode="update"
-        )
-        out = spark.table(name)
-        final = (
-            out.groupBy("user_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                # the row with max n_events is the final state emission
-                # (n strictly increases per user across micro-batches)
-                F.max_by("total_value", "n_events").alias("total_value"),
-            )
-        )
-        return spark.createDataFrame(final.collect(), final.schema)
+    # 8 files + 2 per trigger => ~4 micro-batches: the state-restore path
+    # (get/update across batches) is what this row attests.
+    return _replay_stream(
+        spark, load_table(spark, sf_dir, "events"), SE.read_event_stream,
+        lambda stream: SE.running_user_totals(stream()),
+        lambda out: out.groupBy("user_id").agg(
+            F.max("n_events").alias("n_events"),
+            # the row with max n_events is the final state emission
+            # (n strictly increases per user across micro-batches)
+            F.max_by("total_value", "n_events").alias("total_value"),
+        ),
+        output_mode="update", files=8, per_trigger=2,
+    )
 
 
 @register(
@@ -1601,53 +1656,32 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "O(redelivery horizon) state, never O(stream).",
 )
 def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from spreadsheet_etl_engine_spark.streaming import dedup as SD
     from spreadsheet_etl_engine_spark.streaming import events as SE
 
     ev = load_table(spark, sf_dir, "events")
-    redelivered = ev.filter(F.col("event_id") % 7 == 3)
-    with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/events_in"
-        ev.unionByName(redelivered).repartition(8).write.mode(
-            "overwrite"
-        ).parquet(src)
-        stream = SE.read_event_stream(spark, src, max_files_per_trigger=2)
-        # Backfill watermark sizing (the streaming_view_click_join rule,
-        # made data-driven): the delay must cover the REPLAYED span or
-        # rows in files processed after a newer file are dropped as
-        # late — one poison timestamp (epoch/9999) in an early micro-
-        # batch would otherwise advance the watermark past the whole
-        # feed (the resample_gapfill poison-ts class, streaming form).
-        lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-        span_days = (hi - lo).days + 2 if lo is not None else 31
-        deduped = SD.dedup_within_watermark(stream, "ts", f"{span_days} days")
-        out_dir = f"{tmp}/deduped"
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        final = (
-            spark.read.schema(SE.EVENT_SCHEMA).parquet(out_dir)
-            .groupBy("event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.countDistinct("event_id").alias("n_event_ids"),
-                F.sum(
-                    finite_or_fail(F.col("value"), "value")
-                    .cast("decimal(18,2)")
-                ).cast("double").alias("total_value"),
-            )
-        )
-        # Materialize before the temp dir disappears (per-type rollup —
-        # aggregate-state-sized, same contract as the memory sinks).
-        return spark.createDataFrame(final.collect(), final.schema)
+    # Backfill watermark sizing (the streaming_view_click_join rule, made
+    # data-driven): the delay must cover the REPLAYED span or rows in
+    # files processed after a newer file are dropped as late — one poison
+    # timestamp (epoch/9999) in an early micro-batch would otherwise
+    # advance the watermark past the whole feed (the resample_gapfill
+    # poison-ts class, streaming form).
+    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
+    span_days = (hi - lo).days + 2 if lo is not None else 31
+    return _replay_stream(
+        spark, ev.unionByName(ev.filter(F.col("event_id") % 7 == 3)),
+        SE.read_event_stream,
+        lambda stream: SD.dedup_within_watermark(
+            stream(), "ts", f"{span_days} days"),
+        lambda out: out.groupBy("event_type").agg(
+            F.count("*").alias("n_events"),
+            F.countDistinct("event_id").alias("n_event_ids"),
+            F.sum(
+                finite_or_fail(F.col("value"), "value").cast("decimal(18,2)")
+            ).cast("double").alias("total_value"),
+        ),
+        output_mode="append", files=8, per_trigger=2,
+    )
 
 
 @register(
@@ -1673,62 +1707,39 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "batch exact-dedup survivorship row per hash.",
 )
 def streaming_seen_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from spreadsheet_etl_engine_spark.streaming import dedup as SD
-    from spreadsheet_etl_engine_spark.streaming import events as SE
 
     docs = load_table(spark, sf_dir, "documents")
-    redelivered = docs.filter(F.col("doc_id") % 5 == 2)
-    with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/docs_in"
-        docs.unionByName(redelivered).repartition(8).write.mode(
-            "overwrite"
-        ).parquet(src)
-        stream = SD.read_document_stream(spark, src, max_files_per_trigger=2)
-        name = "streaming_seen_index_sink"
-        # Scale-governed state partitioning (r16) — same rationale and
-        # restore discipline as streaming_dedup_fuzzy; the emitted
-        # (hash, count, min-id) rows are partitioning-independent.
-        import glob as _glob
-        import math as _math
-
-        src_rows = spark.read.parquet(src).count()
-        n_triggers = max(
-            1, _math.ceil(len(_glob.glob(f"{src}/*.parquet")) / 2))
-        n_parts = SD.stream_state_partitions(spark, src_rows / n_triggers)
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        try:
-            SE.run_to_memory_sink(
-                SD.seen_index_stream(stream), name, output_mode="update"
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        out = spark.table(name)
-        final = out.groupBy("content_hash").agg(
+    # The emitted (hash, count, min-id) rows do not depend on the state
+    # partitioning, so the stateful width is sized for speed alone.
+    return _replay_stream(
+        spark, docs.unionByName(docs.filter(F.col("doc_id") % 5 == 2)),
+        SD.read_document_stream,
+        lambda stream: SD.seen_index_stream(stream()),
+        lambda out: out.groupBy("content_hash").agg(
             F.max("n_copies").alias("n_copies"),
             F.max_by("rep_doc_id", "n_copies").alias("rep_doc_id"),
-        ).select("content_hash", "rep_doc_id", "n_copies")
-        return spark.createDataFrame(final.collect(), final.schema)
+        ).select("content_hash", "rep_doc_id", "n_copies"),
+        output_mode="update", files=8, per_trigger=2, stateful=True,
+    )
 
 
 @register(
     "streaming_dedup_fuzzy",
-    # FUZZY dedup on ingest (r13, r12 verdict Next 3): MinHash band
-    # keys computed per-row in each micro-batch, one stateful shuffle
-    # keying applyInPandasWithState on (band_id, band_hash); a new id
-    # emits a candidate pair per prior bucket occupant.  The streamed
-    # corpus is the even-doc_id half, with the %5==2 subset re-
-    # delivered (at-least-once transport) across 8 files / 2 per
-    # trigger so copies land in different micro-batches — re-delivered
-    # ids are already in bucket state and must emit NOTHING.  The
-    # emitted pair set (after the consumer's DISTINCT — multi-band
-    # collisions emit once per band, exactly like the batch bucket
-    # join before its DISTINCT) equals the batch minhash_lsh_pairs
-    # restricted to the streamed corpus, so the oracle is that query's
-    # SQL with the corpus predicate — it never sees the injection; the
-    # duplicates it ignores are the ones the state must swallow.
+    # FUZZY dedup on ingest: MinHash band keys computed per-row in each
+    # micro-batch, one stateful shuffle keying applyInPandasWithState on
+    # (band_id, band_hash); a new id emits a candidate pair per prior
+    # bucket occupant.  The streamed corpus is the even-doc_id half, with
+    # the %5==2 subset re-delivered (at-least-once transport) across 8
+    # files / 2 per trigger so copies land in different micro-batches —
+    # re-delivered ids are already in bucket state and must emit
+    # NOTHING.  The emitted pair set (after the consumer's DISTINCT —
+    # multi-band collisions emit once per band, exactly like the batch
+    # bucket join before its DISTINCT) equals the batch
+    # minhash_lsh_pairs restricted to the streamed corpus, so the oracle
+    # is that query's SQL with the corpus predicate — it never sees the
+    # injection; the duplicates it ignores are the ones the state must
+    # swallow.
     oracle=f"""
     WITH sh AS (
         SELECT doc_id,
@@ -1761,70 +1772,21 @@ def streaming_seen_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "key with a documented skew cap (max_bucket).",
 )
 def streaming_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from pyspark.sql.types import (
-        IntegerType, LongType, StructField, StructType,
-    )
-
     from spreadsheet_etl_engine_spark.streaming import dedup as SD
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 2 == 0
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
+    # Pairs form strictly within a band bucket, so the result does not
+    # depend on the state partitioning; the stateful width only moves the
+    # fixed per-partition cost of each micro-batch.  The distinct pair
+    # set has the cardinality the batch twin returns.
+    return _replay_stream(
+        spark, docs.unionByName(docs.filter(F.col("doc_id") % 5 == 2)),
+        SD.read_document_stream,
+        lambda stream: SD.band_candidates_stream(
+            stream(), "text", "doc_id", num_hashes=8, bands=4),
+        lambda out: out.select("id_a", "id_b").distinct(),
+        output_mode="append", files=8, per_trigger=2, stateful=True,
     )
-    redelivered = docs.filter(F.col("doc_id") % 5 == 2)
-    with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/docs_in"
-        docs.unionByName(redelivered).repartition(8).write.mode(
-            "overwrite"
-        ).parquet(src)
-        stream = SD.read_document_stream(spark, src, max_files_per_trigger=2)
-        out_dir = f"{tmp}/pairs"
-        # Scale-governed state partitioning (r16, guide §2.2): size the
-        # stateful shuffle by per-trigger input rows, not the session's
-        # batch-query default — see SD.stream_state_partitions.  Results
-        # are partitioning-independent (pairs form strictly within a
-        # band bucket); only the fixed per-partition-per-batch cost
-        # moves.  Restored after the stream so the final DISTINCT runs
-        # under the session default.  The conf is sized BEFORE the
-        # stateful operator is constructed so the packed-state group
-        # derivation (resolve_state_groups, 8× partitions) follows it.
-        import glob as _glob
-        import math as _math
-
-        src_rows = spark.read.parquet(src).count()
-        n_triggers = max(
-            1, _math.ceil(len(_glob.glob(f"{src}/*.parquet")) / 2))
-        n_parts = SD.stream_state_partitions(spark, src_rows / n_triggers)
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        try:
-            pairs = SD.band_candidates_stream(
-                stream, "text", "doc_id", num_hashes=8, bands=4
-            )
-            q = (
-                pairs.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        pair_schema = StructType([
-            StructField("id_a", LongType()),
-            StructField("id_b", LongType()),
-            StructField("band_id", IntegerType()),
-        ])
-        final = (
-            spark.read.schema(pair_schema).parquet(out_dir)
-            .select("id_a", "id_b").distinct()
-        )
-        # Materialize before the temp dir disappears (distinct pair set
-        # — the same cardinality the batch twin returns).
-        return spark.createDataFrame(final.collect(), final.schema)
 
 
 @register(

@@ -1,4 +1,4 @@
-"""Streaming deduplication — dedup ON INGEST (r11 verdict item 7).
+"""Streaming deduplication — dedup ON INGEST.
 
 All batch dedup (operators/dedup.py) assumes the corpus is at rest; a
 real training-data pipeline also dedups the feed as it arrives, with
@@ -15,14 +15,14 @@ operators, both with batch twins so the DuckDB oracle applies:
 * :func:`seen_index_stream` — the ``incremental_dedup`` seen-index
   contract as ARBITRARY STATE (``applyInPandasWithState``):
   ``(n_copies, min_id)`` per content hash, packed into bounded hash
-  groups (r15) — the state-store form of the persisted index table
+  groups — the state-store form of the persisted index table
   ``operators/dedup.py:incremental_dedup`` maintains in parquet.  Every emitted quantity is
   arrival-order-independent at final state (count and min are
   commutative), which is what makes a streaming operator batch-oracle-
   able at all — "first seen" by arrival would be micro-batch-layout
   luck.
 
-* :func:`band_candidates_stream` (r13, r12 verdict Next 3) — FUZZY
+* :func:`band_candidates_stream` — FUZZY
   dedup on ingest: the state is keyed by MinHash LSH band
   (``operators/dedup.py:minhash_band_keys`` — the same banding the
   batch self-join uses), each bucket remembers the ids it has seen,
@@ -52,20 +52,16 @@ DOC_SCHEMA = StructType(
     ]
 )
 
-# Conf key: stream input rows per state-shuffle partition per trigger
-# (see stream_state_partitions); override per deployment.
-ROWS_PER_STATE_PARTITION_CONF = (
-    "spark.spreadsheet_etl.streaming.rowsPerStatePartition"
-)
-_ROWS_PER_STATE_PARTITION_DEFAULT = 256
+# Stream input rows per state-shuffle partition per trigger (see
+# stream_state_partitions).
+_ROWS_PER_STATE_PARTITION = 256
 
 
 def stream_state_partitions(
     spark: SparkSession, rows_per_trigger: float
 ) -> int:
-    """Scale-governed state-shuffle partition count for a stateful
-    streaming query (r16 optimization round; guide §2.2 applied to the
-    micro-batch dimension).
+    """State-shuffle partition count for a stateful streaming query, sized
+    by its per-trigger input rows instead of the batch-query default.
 
     ``spark.sql.shuffle.partitions`` fixes a stateful query's state
     partition count at FIRST start (it is locked into the checkpoint),
@@ -75,79 +71,51 @@ def stream_state_partitions(
     default (≈ cluster cores) is a batch-query default: measured on
     the sf0.1 fuzzy-dedup harness, 32 near-empty state partitions cost
     ~0.9 s per micro-batch against tens of ms of useful work, and the
-    bench line ANTI-scaled 8→32 cores (r15 scaling block, ratio 0.79;
-    P∈{32,8,4,2,1} measured 6.2/3.6/3.5/4.1/5.1 s — the optimum is
-    where per-task state work ≫ the fixed cost).  Sizing by per-trigger
-    input volume makes the count scale-adaptive instead of a constant:
-    ``rowsPerStatePartition`` (default 256: at the measured ~0.3-1 ms
-    of banding + state work per stream row, a partition's per-trigger
-    slice costs ~10-25× its fixed cost, so tasks stay useful without
-    starving parallelism) stream rows per partition per trigger, floor 1, cap 4× the cluster's
-    defaultParallelism so one huge backfill trigger cannot demand an
-    absurd count.  At real ingest scale the same expression yields
-    thousands of partitions; locally it stops burning a fixed cost per
-    idle partition.  Like any state re-partitioning, a changed count
-    re-keys the state store — it must be chosen before the FIRST start
-    of a checkpointed query and kept for its lifetime.
+    bench line ANTI-scaled 8→32 cores (ratio 0.79; P∈{32,8,4,2,1}
+    measured 6.2/3.6/3.5/4.1/5.1 s — the optimum is where per-task
+    state work ≫ the fixed cost).  The count is one partition per 256
+    stream rows per trigger (at the measured ~0.3-1 ms of banding +
+    state work per stream row, a partition's per-trigger slice costs
+    ~10-25× its fixed cost, so tasks stay useful without starving
+    parallelism), floor 1, cap 4× the cluster's defaultParallelism so
+    one huge backfill trigger cannot demand an absurd count.  At real
+    ingest scale the same expression yields thousands of partitions;
+    locally it stops burning a fixed cost per idle partition.  Like any
+    state re-partitioning, a changed count re-keys the state store — it
+    must be chosen before the FIRST start of a checkpointed query and
+    kept for its lifetime.
     """
-    rows_target = int(
-        spark.conf.get(
-            ROWS_PER_STATE_PARTITION_CONF,
-            str(_ROWS_PER_STATE_PARTITION_DEFAULT),
-        )
-    )
-    if rows_target < 1:
-        raise ValueError(
-            f"{ROWS_PER_STATE_PARTITION_CONF}={rows_target} must be >= 1")
     cap = 4 * spark.sparkContext.defaultParallelism
-    want = -(-int(rows_per_trigger) // rows_target)  # ceil
+    want = -(-int(rows_per_trigger) // _ROWS_PER_STATE_PARTITION)  # ceil
     return max(1, min(want, cap))
 
 
-# Conf key: packed-state group count for the stateful dedup operators
-# (see resolve_state_groups); override per deployment.
-STATE_GROUPS_CONF = "spark.spreadsheet_etl.streaming.stateGroups"
 _STATE_GROUPS_PER_PARTITION = 8
 
 
-def resolve_state_groups(spark: SparkSession, state_groups: int | None) -> int:
-    """Resolve the packed-state group count (r16; VERDICT r15 item 5).
+def resolve_state_groups(spark: SparkSession) -> int:
+    """Packed-state group count of the stateful dedup operators:
+    ``8 × spark.sql.shuffle.partitions`` of the session the operator is
+    built in (read at construction, so size the width FIRST).
 
-    ``None`` reads the session conf ``STATE_GROUPS_CONF``; when that is
-    also unset, the default DERIVES from the state-shuffle width:
-    ``8 × spark.sql.shuffle.partitions`` (read at operator-construction
-    time, so size the partition conf FIRST — the harness queries do).
-    Under the session default of ~cluster-cores partitions this equals
-    the r15 literal (8×32 = 256); when the partition count is sized by
-    :func:`stream_state_partitions` the group count follows it.  Why 8×:
-    every TOUCHED group costs ~1 ms of ``applyInPandasWithState``
-    serializer overhead per micro-batch (measured again this round via
-    an in-worker SIGPROF sampler: >90% of the streaming line's worker
-    CPU sat in ``gen_data_and_pandas``/``arrow_to_pandas``/
-    ``construct_state_pdf`` pandas plumbing, not the state function), so
-    groups ≫ needed spread is pure overhead — a groups sweep at P=3
+    Why 8×: every TOUCHED group costs ~1 ms of
+    ``applyInPandasWithState`` serializer overhead per micro-batch (an
+    in-worker SIGPROF sampler put >90% of the streaming line's worker
+    CPU in ``gen_data_and_pandas``/``arrow_to_pandas``/
+    ``construct_state_pdf`` pandas plumbing, not the state function),
+    so groups ≫ needed spread is pure overhead — a groups sweep at P=3
     measured worker CPU 14.4/9.5/8.7/7.6/7.5 s per run at
     256/64/24/12/6 groups, identical output — while groups must still
     exceed partitions enough for even hash placement (8× keeps the
     max/mean partition load reasonable) and keep each group's state row
     SMALL (``applyInPandasWithState`` rebuilds a touched group's whole
-    state row per batch).  An explicit argument or the conf wins over
-    the derivation.  CHECKPOINT: the group count is part of the
-    stateful key, so a changed value (including via a changed partition
-    conf) re-keys the state store — set both before the FIRST start of
-    a checkpointed query and keep them for the query's lifetime
-    (upgrades need a fresh ``checkpointLocation``).
+    state row per batch).  CHECKPOINT: the group count is part of the
+    stateful key, so a changed partition width re-keys the state store
+    — keep it for the query's lifetime (upgrades need a fresh
+    ``checkpointLocation``).
     """
-    if state_groups is None:
-        conf_val = spark.conf.get(STATE_GROUPS_CONF, None)
-        if conf_val is not None and conf_val != "":
-            state_groups = int(conf_val)
-        else:
-            state_groups = _STATE_GROUPS_PER_PARTITION * int(
-                spark.conf.get("spark.sql.shuffle.partitions"))
-    if state_groups < 1:
-        raise ValueError(f"state_groups={state_groups} must be >= 1")
-    return state_groups
+    return _STATE_GROUPS_PER_PARTITION * int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 # Sentinel for "no non-NULL id seen": keeps the Arrow batch null-free
@@ -208,7 +176,7 @@ def dedup_within_watermark(
     the late predicate is INCLUSIVE, so a row whose event time is
     exactly 1970-01-01T00:00:00Z, processed in a later micro-batch
     than any newer file, ties the floored watermark and is silently
-    dropped as late NO MATTER how large ``delay`` is (found by the r12
+    dropped as late NO MATTER how large ``delay`` is (found by the
     edge sweep: a corrupt epoch timestamp is routine corpus garbage).
     The operator therefore watermarks a derived column clamped to
     epoch+1 day — rows in that first day are treated as 1 day newer
@@ -231,7 +199,6 @@ def dedup_within_watermark(
 
 def seen_index_stream(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    *, state_groups: int | None = None,
 ) -> DataFrame:
     """Running content-hash seen-index: ``(n_copies, min id)`` per
     distinct ``md5(text)``; emits the updated
@@ -246,26 +213,26 @@ def seen_index_stream(
     in ``incremental_dedup`` (distinct content, not corpus rows), with
     RocksDB state-store backing at 100 TB.
 
-    State LAYOUT (r15 optimization round; result-identical, same
-    rationale as :func:`band_candidates_stream`): hashes are packed
-    ``state_groups`` per state row instead of one state row per
-    distinct hash — ``applyInPandasWithState`` pays ~1 ms of fixed
-    serializer cost per GROUP per batch, so a one-group-per-hash
-    layout costs O(distinct hashes) of pure overhead every
-    micro-batch.  The stateful key is ``pmod(xxhash64(content_hash),
-    state_groups)``; each group's state holds its hashes' counters as
-    parallel arrays, per-batch counting is one pandas groupby, and the
-    per-touched-hash emission (count + min over the sentinel-encoded
-    id) is unchanged row-for-row.  ``state_groups=None`` (default)
-    resolves the ``STATE_GROUPS_CONF`` session conf — see
+    State LAYOUT (result-identical, same rationale as
+    :func:`band_candidates_stream`): hashes are packed into
+    :func:`resolve_state_groups` groups per state row instead of one
+    state row per distinct hash — ``applyInPandasWithState`` pays ~1 ms
+    of fixed serializer cost per GROUP per batch, so a
+    one-group-per-hash layout costs O(distinct hashes) of pure overhead
+    every micro-batch.  The stateful key is
+    ``pmod(xxhash64(content_hash), groups)``; each group's state holds
+    its hashes' counters as parallel arrays, per-batch counting is one
+    pandas groupby, and the per-touched-hash emission (count + min over
+    the sentinel-encoded id) is unchanged row-for-row.  The group count
+    follows the width of the session ``docs`` belongs to — see
     :func:`resolve_state_groups` for sizing and the checkpoint-rekey
-    consequences (this layout also cannot restore pre-r15 checkpoints:
-    fresh ``checkpointLocation`` on upgrade).
+    consequences (a checkpoint written by the one-row-per-hash layout
+    cannot be restored: use a fresh ``checkpointLocation``).
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    state_groups = resolve_state_groups(docs.sparkSession, state_groups)
+    groups = resolve_state_groups(docs.sparkSession)
     output_schema = "content_hash string, rep_doc_id long, n_copies long"
     state_schema = "hashes array<string>, ns array<long>, min_ids array<long>"
 
@@ -332,7 +299,7 @@ def seen_index_stream(
         )
         .withColumn(
             "_state_group",
-            F.pmod(F.xxhash64("content_hash"), F.lit(state_groups)),
+            F.pmod(F.xxhash64("content_hash"), F.lit(groups)),
         )
         .groupBy("_state_group")
         .applyInPandasWithState(
@@ -351,7 +318,6 @@ def band_candidates_stream(
     bands: int = 4,
     shingle_k: int = 3,
     max_bucket: int | None = None,
-    state_groups: int | None = None,
 ) -> DataFrame:
     """Streaming MinHash-LSH candidate pairs — fuzzy dedup on ingest.
 
@@ -386,49 +352,44 @@ def band_candidates_stream(
     — trading recall on degenerate buckets for a hard state/output
     bound.  Leave None when exact batch parity is required.
 
-    State LAYOUT (r15 optimization round; result-identical): buckets
-    are packed ``state_groups`` per state row instead of one state row
-    per distinct band key.  ``applyInPandasWithState`` pays a fixed
-    per-GROUP serializer cost on both sides of the Arrow boundary
+    State LAYOUT (result-identical): buckets are packed into
+    :func:`resolve_state_groups` groups per state row instead of one
+    state row per distinct band key.  ``applyInPandasWithState`` pays a
+    fixed per-GROUP serializer cost on both sides of the Arrow boundary
     (per-group pandas slicing/concat + a state round-trip per group —
     measured ~1ms/group, ~55-60s of worker CPU per sf0.1 harness run
     over ~13k single-occupant band-key groups, guide §4.1/§4.5), so
-    the stateful key is ``pmod(xxhash64(band_id, band_hash),
-    state_groups)`` and each group's state holds its buckets as
-    parallel arrays ``(band ids, band hashes, id lists)``.  Pairing
-    still happens strictly WITHIN a (band_id, band_hash) bucket — the
-    dict rebuild per group is O(bucket entries) — so the emitted pair
-    set, the re-delivery no-op, and the per-bucket ``max_bucket``
-    freeze are byte-identical to the one-group-per-band-key layout
-    (pytest-pinned against batch ``minhash_lsh_pairs``).  Sizing
-    (``state_groups=None`` resolves the ``STATE_GROUPS_CONF`` session
-    conf — :func:`resolve_state_groups`):
-    ``state_groups`` only needs to be large enough to spread state
-    evenly over shuffle partitions and keep per-group state rebuilds
-    small; 256 is right from 10^3 to 10^7 band keys — scale it with
-    corpus size (e.g. ~corpus_rows/10k) on a real deployment, and note
-    a changed value re-keys the state store (not checkpoint-compatible
-    with a running query).  MIGRATION: the packed layout itself is
-    likewise incompatible with checkpoints written by the pre-r15
-    one-row-per-band-key layout (different stateful key AND value
-    schema) — upgrading a running deployment across r15 requires a
-    fresh ``checkpointLocation`` (replay the retained feed), exactly
-    as for a ``state_groups`` change.  The partition COUNT of the
-    stateful shuffle is a third checkpoint-pinned quantity: size it
-    before first start via :func:`stream_state_partitions`.
+    the stateful key is ``pmod(xxhash64(band_id, band_hash), groups)``
+    and each group's state holds its buckets as parallel arrays
+    ``(band ids, band hashes, id lists)``.  Pairing still happens
+    strictly WITHIN a (band_id, band_hash) bucket — the dict rebuild per
+    group is O(bucket entries) — so the emitted pair set, the
+    re-delivery no-op, and the per-bucket ``max_bucket`` freeze are
+    byte-identical to the one-group-per-band-key layout (pytest-pinned
+    against batch ``minhash_lsh_pairs``).  The group count only needs to
+    spread state evenly over the shuffle partitions and keep per-group
+    state rebuilds small, so it follows the width of the session
+    ``docs`` belongs to (:func:`resolve_state_groups`).  CHECKPOINT:
+    the group count and the partition COUNT of the stateful shuffle are
+    both part of the state layout — size the width before first start
+    via :func:`stream_state_partitions` and keep it for the query's
+    lifetime; a checkpoint written by the one-row-per-band-key layout
+    (different stateful key AND value schema) cannot be restored
+    either: replay the retained feed into a fresh
+    ``checkpointLocation``.
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from spreadsheet_etl_engine_spark.operators.dedup import minhash_band_keys
 
-    state_groups = resolve_state_groups(docs.sparkSession, state_groups)
+    groups = resolve_state_groups(docs.sparkSession)
     keys = minhash_band_keys(
         docs.filter(F.col(id_col).isNotNull()), text_col, id_col,
         num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
     ).withColumn(
         "_state_group",
-        F.pmod(F.xxhash64("band_id", "band_hash"), F.lit(state_groups)),
+        F.pmod(F.xxhash64("band_id", "band_hash"), F.lit(groups)),
     )
 
     output_schema = "id_a long, id_b long, band_id int"

@@ -3,6 +3,12 @@ on the same data (file source, availableNow trigger, memory sink)."""
 
 from __future__ import annotations
 
+import collections
+import concurrent.futures
+import contextlib
+import threading
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -791,9 +797,9 @@ def test_read_document_stream_validates_columns(spark, tmp_path):
 
 
 def test_stream_state_partitions_scaling_and_conf(spark):
-    """r16: the scale-governed state-shuffle partition count — floor 1
-    on tiny triggers, linear in per-trigger rows, capped at 4× the
-    cluster parallelism, conf-overridable, fail-loud on a bad conf."""
+    """The scale-governed state-shuffle partition count — floor 1 on tiny
+    triggers, linear in per-trigger rows, capped at 4× the cluster
+    parallelism."""
     from spreadsheet_etl_engine_spark.streaming import dedup as SD
 
     par = spark.sparkContext.defaultParallelism
@@ -804,37 +810,117 @@ def test_stream_state_partitions_scaling_and_conf(spark):
     assert SD.stream_state_partitions(spark, 256 * 10) == 10
     # Cap: one huge backfill trigger cannot demand an absurd count.
     assert SD.stream_state_partitions(spark, 256 * par * 400) == 4 * par
-    spark.conf.set(SD.ROWS_PER_STATE_PARTITION_CONF, "10")
-    try:
-        assert SD.stream_state_partitions(spark, 100) == 10
-        spark.conf.set(SD.ROWS_PER_STATE_PARTITION_CONF, "0")
-        with pytest.raises(ValueError, match="must be >= 1"):
-            SD.stream_state_partitions(spark, 100)
-    finally:
-        spark.conf.unset(SD.ROWS_PER_STATE_PARTITION_CONF)
 
 
 def test_resolve_state_groups_conf(spark):
-    """r16: packed-state group count resolves None -> session conf ->
-    derived default (8x the state-shuffle partition conf, which equals
-    the old 256 literal under a 32-partition session); an explicit
-    argument wins; invalid values fail loud."""
+    """The packed-state group count is 8x the shuffle width of the
+    session the operator is built in (256 under a 32-partition one)."""
     from spreadsheet_etl_engine_spark.streaming import dedup as SD
 
     cur_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert SD.resolve_state_groups(spark, None) == 8 * cur_parts
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    assert SD.resolve_state_groups(spark) == 8 * cur_parts
+    wide = spark.newSession()
+    wide.conf.set("spark.sql.shuffle.partitions", "32")
+    assert SD.resolve_state_groups(wide) == 256
+
+
+# The registry's streaming queries run each replay in a child session, so
+# a caller's own session conf and a second query on the same session are
+# operating conditions they must survive.
+PARTS = "spark.sql.shuffle.partitions"
+TZ = "spark.sql.session.timeZone"
+ANSI = "spark.sql.ansi.enabled"
+
+
+@contextlib.contextmanager
+def _caller_conf(spark, conf):
+    saved = {k: spark.conf.get(k) for k in conf}
     try:
-        assert SD.resolve_state_groups(spark, None) == 256  # r15 literal
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    assert SD.resolve_state_groups(spark, 7) == 7
-    spark.conf.set(SD.STATE_GROUPS_CONF, "1024")
-    try:
-        assert SD.resolve_state_groups(spark, None) == 1024
-        assert SD.resolve_state_groups(spark, 7) == 7  # arg wins
-    finally:
-        spark.conf.unset(SD.STATE_GROUPS_CONF)
-    with pytest.raises(ValueError, match="state_groups"):
-        SD.resolve_state_groups(spark, 0)
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def _in_threads(*calls):
+    with concurrent.futures.ThreadPoolExecutor(len(calls)) as pool:
+        return [f.result(timeout=600) for f in [pool.submit(c) for c in calls]]
+
+
+def _rows(df):
+    return collections.Counter(tuple(r) for r in df.collect())
+
+
+def test_scoped_session_copies_the_caller_conf(spark):
+    from spreadsheet_etl_engine_spark.ext_queries import _scoped_session
+
+    hostile = {TZ: "America/New_York", PARTS: "7", ANSI: "false"}
+    with _caller_conf(spark, hostile):
+        child = _scoped_session(spark)
+        assert {k: child.conf.get(k) for k in hostile} == hostile
+        wide = _scoped_session(spark, shuffle_partitions=3)
+        assert wide.conf.get(PARTS) == "3"
+        assert wide.conf.get(TZ) == "America/New_York"
+        assert {k: spark.conf.get(k) for k in hostile} == hostile
+
+
+def test_stream_queries_leave_the_caller_conf_alone(spark, sf_dir):
+    """The two stateful replays size their shuffle width in a child: a
+    thread polling the caller's session never sees another value."""
+    from spreadsheet_etl_engine_spark import ext_queries as EQ
+
+    # The time zone stays as the caller has it: load_table still pins UTC
+    # on the session it reads through.
+    with _caller_conf(spark, {PARTS: "7"}):
+        before = {k: spark.conf.get(k) for k in (TZ, ANSI, PARTS)}
+        seen, done = set(), threading.Event()
+
+        def poll():
+            while not done.is_set():
+                seen.add(spark.conf.get(PARTS))
+                time.sleep(0.005)
+
+        poller = threading.Thread(target=poll)
+        poller.start()
+        try:
+            for query in (EQ.streaming_seen_index, EQ.streaming_dedup_fuzzy):
+                assert query(spark, sf_dir).count() > 0
+        finally:
+            done.set()
+            poller.join(timeout=10)
+        assert not poller.is_alive()
+        assert seen == {"7"}
+        assert {k: spark.conf.get(k) for k in (TZ, ANSI, PARTS)} == before
+
+
+def test_one_stream_query_runs_twice_at_once_on_one_session(spark, sf_dir):
+    from spreadsheet_etl_engine_spark import ext_queries as EQ
+
+    a, b = _in_threads(
+        lambda: _rows(EQ.streaming_tumbling_counts(spark, sf_dir)),
+        lambda: _rows(EQ.streaming_tumbling_counts(spark, sf_dir)),
+    )
+    assert a == b and len(a) > 0
+
+
+def test_stateful_stream_queries_run_at_once_and_match_oracles(spark, sf_dir):
+    import duckdb
+
+    from spreadsheet_etl_engine_spark import registry
+    from spreadsheet_etl_engine_spark.sources.readers import TABLE_NAMES
+
+    names = ["streaming_seen_index", "streaming_dedup_fuzzy"]
+    got = _in_threads(*[
+        (lambda n=n: registry.get(n).fn(spark, sf_dir).collect()) for n in names])
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    for name, rows in zip(names, got):
+        res = con.execute(registry.get(name).oracle)
+        cols = [d[0] for d in res.description]
+        want = collections.Counter(res.fetchall())
+        assert collections.Counter(tuple(r[c] for c in cols) for r in rows) == want
+        assert len(want) > 0, name
+    con.close()
