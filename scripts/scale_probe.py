@@ -431,11 +431,11 @@ def probe_stardiam(spark: SparkSession, reps: int, n: int) -> dict:
     * default-choice evidence: on the dup-shaped arm (diameter 15,
       chains of 16 — already the worst REALISTIC dup shape; cliques
       converge in 1 round) compare label vs star wall time.  If label
-      wins here, it stays the default.
+      wins here, it stays connected_components' first choice.
     * diameter growth: the same total edges re-wired into chains of 50
-      (diameter 49, past the default max_iter=25 fail-loud bound).
-      label's round count grows with the diameter; star's stays
-      O(log n) — star must converge under the SAME budget with wall
+      (diameter 49, past the default max_iter=25, where the default
+      call falls back to star).  label's round count grows with the
+      diameter; star's stays O(log n) — star must converge with wall
       time far below label-at-49's extrapolation.
 
     Total edge count is FIXED across arms so any wall-time movement is
@@ -458,18 +458,22 @@ def probe_stardiam(spark: SparkSession, reps: int, n: int) -> dict:
                         + F.col("id") % m + 1)).alias("id_b"),
         )
 
-    def run(edges: DataFrame, algorithm: str):
+    def run(edges: DataFrame, max_iter: int):
         return connected_components(
-            edges, max_iter=60, algorithm=algorithm
+            edges, max_iter=max_iter
         ).agg(F.countDistinct("component")).collect()
 
+    # label: 60 rounds cover every arm's diameter; star: one label round
+    # leaves labels moving on any graph with an edge, which forces the
+    # star fallback.
+    label, star = 60, 1
     edup, e16, e50 = dup_stars(), chains(16), chains(50)
     t_label_dup, t_star_dup = ab_medians(
-        lambda: run(edup, "label"), lambda: run(edup, "star"), reps)
+        lambda: run(edup, label), lambda: run(edup, star), reps)
     t_label16, t_star16 = ab_medians(
-        lambda: run(e16, "label"), lambda: run(e16, "star"), reps)
+        lambda: run(e16, label), lambda: run(e16, star), reps)
     t_label50, t_star50 = ab_medians(
-        lambda: run(e50, "label"), lambda: run(e50, "star"), reps)
+        lambda: run(e50, label), lambda: run(e50, star), reps)
     return {
         "probe": "components_label_vs_star", "edges": n,
         "t_label_dup": round(t_label_dup, 2),

@@ -385,7 +385,6 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "text", "doc_id", num_hashes=8, bands=4,
         parallelism=spark.sparkContext.defaultParallelism,
         checkpoint_dir=DD.resolve_checkpoint_dir(spark),
-        algorithm=DD.resolve_components_algorithm(spark),
     )
 
 
@@ -472,7 +471,6 @@ def curation_pipeline_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "text", "doc_id", num_hashes=8, bands=4,
         parallelism=spark.sparkContext.defaultParallelism,
         checkpoint_dir=DD.resolve_checkpoint_dir(spark),
-        algorithm=DD.resolve_components_algorithm(spark),
     )
     key = F.col("doc_id").cast("string")
     d = docs.select(

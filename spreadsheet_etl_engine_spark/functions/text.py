@@ -111,12 +111,6 @@ def bpeish_token_count(text: Column) -> Column:
     return F.when(text.isNotNull(), F.size(bpeish_tokens(text)))
 
 
-def avg_token_length(text: Column) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return (total.cast("double") / F.size(toks)).alias("avg_token_len")
-
-
 def quality_score(text: Column) -> Column:
     """Cheap heuristic quality score in [0, 1]: penalizes very short docs,
     single-char tokens, and low vocabulary diversity.  Deterministic,

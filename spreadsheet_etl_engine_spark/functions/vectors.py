@@ -47,44 +47,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(den == F.lit(0.0), F.lit(0.0)).otherwise(dot(a, b) / den)
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    diffs = F.zip_with(a, b, lambda x, y: x.cast("double") - y.cast("double"))
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, d: acc + d * d))
-
-
-def cosine_pandas(a: Column, b: Column) -> Column:
-    """Arrow-batched pandas-UDF cosine — the escape hatch when a kernel
-    genuinely can't be expressed with built-ins (this one can; the expr
-    version above is the default).  Batches arrive as pandas Series of
-    numpy arrays; math is vectorized numpy, never per-row Python."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _cos_fn(xs, ys):
-        # NULL-on-either-side → NULL, matching the expr cosine (its
-        # fold over a NULL array is NULL), and a zero-row Arrow batch
-        # → empty, matching _cosine_to_centroids' guard — previously
-        # both died in np.stack (r15 review pass 11).
-        mask = (xs.notna() & ys.notna()).to_numpy()
-        if not mask.any():
-            return pd.Series([None] * len(xs), dtype=object)
-        xm = np.stack(xs[mask].to_numpy()).astype(np.float64)
-        ym = np.stack(ys[mask].to_numpy()).astype(np.float64)
-        dots = np.einsum("ij,ij->i", xm, ym)
-        norms = np.linalg.norm(xm, axis=1) * np.linalg.norm(ym, axis=1)
-        # same zero-vector contract as the expr cosine: 0.0, never NaN
-        safe = np.where(norms == 0.0, 1.0, norms)
-        vals = np.where(norms == 0.0, 0.0, dots / safe)
-        it = iter(vals.tolist())
-        return pd.Series([next(it) if ok else None for ok in mask])
-
-    # Real (non-string) annotations: this module uses postponed annotation
-    # evaluation, which pandas_udf's signature inspection cannot resolve.
-    _cos_fn.__annotations__ = {"xs": pd.Series, "ys": pd.Series, "return": pd.Series}
-    return pandas_udf(_cos_fn, "double")(a, b)
-
-
 def hyperplane_signature(a: Column, planes: list[list[float]]) -> Column:
     """Random-hyperplane LSH signature: one sign bit per plane, packed into
     a long.  ``planes`` is a small engine-generated list (broadcast as

@@ -601,28 +601,6 @@ def ngram_jaccard_pairs(
 
 
 CHECKPOINT_DIR_CONF = "spark.spreadsheet_etl.checkpoint.dir"
-COMPONENTS_ALGORITHM_CONF = "spark.spreadsheet_etl.components.algorithm"
-
-
-def resolve_components_algorithm(spark: SparkSession) -> str:
-    """Session-conf plumbing for :func:`connected_components`' round
-    structure (same pattern as :func:`resolve_checkpoint_dir` — the r9
-    lesson that an operator parameter no registry caller can reach is
-    not really shipped).  Set
-    ``spark.conf.set("spark.spreadsheet_etl.components.algorithm",
-    "star")`` to route every components run in the session through the
-    large-star/small-star formulation — the long-chain escape hatch;
-    unset keeps the measured default (``"label"``, which wins on
-    star/clique-shaped dup graphs).  Invalid values fail loud here, at
-    configuration time, rather than deep inside a running job."""
-    algo = spark.conf.get(COMPONENTS_ALGORITHM_CONF, None)
-    if algo is None or algo == "":
-        return "label"
-    if algo not in ("label", "star"):
-        raise ValueError(
-            f"{COMPONENTS_ALGORITHM_CONF}={algo!r} must be 'label' or "
-            "'star'")
-    return algo
 
 
 def resolve_checkpoint_dir(spark: SparkSession) -> str | None:
@@ -651,6 +629,12 @@ def _delete_path(spark: SparkSession, path: str) -> None:
     fs.delete(hpath, True)
 
 
+# Round budget of the large-star/small-star fallback.  Star needs
+# O(log n) rounds whatever the diameter: 25 finishes a 200-node chain
+# with room to spare, so exhausting it means a defect, not a big graph.
+_STAR_MAX_ROUNDS = 25
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -658,7 +642,6 @@ def connected_components(
     *,
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    algorithm: str = "label",
     _after_edges_pinned=None,
 ) -> DataFrame:
     """Connected components over a pair list → ``(node, component)`` with
@@ -672,11 +655,22 @@ def connected_components(
     dup clusters, which are near-cliques.  Each round is one shuffle
     (join + groupBy on node id); per-round checkpointing truncates the
     lineage so the plan does not grow exponentially with iterations; the
-    loop exits early when a round changes nothing (one scalar count per
-    round, driver-side orchestration only).
+    loop exits early when a round changes nothing (an observed metric on
+    the round's own pin, driver-side orchestration only).
+
+    ``max_iter`` bounds the label rounds.  If labels are still changing
+    after the last one, some component's diameter exceeds ``max_iter``,
+    and the call finishes with alternating large-star/small-star rounds
+    (:func:`_star_components`) over the same pinned edge list: O(log n)
+    rounds whatever the diameter, so long chains converge instead of
+    failing.  Label propagation stays the first choice because dup
+    graphs are star/clique shaped (diameter 2-3), where it needs fewer
+    rounds and a lighter per-round plan (30k star edges: label 3.3 s vs
+    star 3.7 s, ``scripts/scale_probe.py --probe stardiam``).  Both
+    return the same min-id labels (pytest-pinned against union-find).
 
     ``checkpoint_dir`` selects the truncation mechanism — the difference
-    is FAULT TOLERANCE, not results (r9 re-execution review):
+    is FAULT TOLERANCE, not results:
 
     * ``None`` (default): ``localCheckpoint`` — blocks live on executor
       storage with NO lineage to recompute them, so losing any executor
@@ -684,49 +678,23 @@ def connected_components(
       "checkpoint block not found"; it cannot silently corrupt output,
       but a long run on preemptible hardware will not survive.  Fine on
       a single-box deployment and for tests.
-    * a DFS path: each round's labels are written to
-      ``checkpoint_dir/round-NNNNN`` as parquet and read back — a
-      fault-tolerant truncation with an EXPLICIT lifecycle.  This
-      deliberately does NOT use ``DataFrame.checkpoint`` +
-      ``setCheckpointDir`` (r9 advice finding): ``setCheckpointDir`` is
-      a session-GLOBAL mutation that silently redirects every other
-      caller's checkpoints after we return, and Spark only deletes
-      reliable checkpoint files via reference-tracking GC
-      (``spark.cleaner.referenceTracking.cleanCheckpoints``), so a
-      multi-hour run accumulates every round's labels on DFS.  The
-      parquet round-trip touches no session state and deletes round
-      N-1 as soon as round N is durable and no longer referenced; on
-      return only the final round's files remain (the result reads
-      from them — drop the directory after consuming the result).  The
-      directory must not already contain round files (fail-loud
-      ``mode("error")`` — reusing a dir across runs would silently mix
-      rounds).
-
-    ``algorithm`` picks the round structure — results are identical
-    (both return min-id component labels; equivalence is pytest-pinned
-    on chains, triangles, mega-duplicate cliques and random graphs):
-
-    * ``"label"`` (default): min-label propagation, one shuffle per
-      round, O(component diameter) rounds.  The right default for dup
-      graphs, whose components are star/clique shaped (diameter 2-3):
-      on the measured dup-shaped arm (30k star edges, diameter 2) label
-      runs 3.3s vs star's 3.7s — fewer rounds AND a lighter per-round
-      plan (scripts/scale_probe.py --probe stardiam, BENCH_NOTES r11).
-    * ``"star"``: alternating large-star/small-star (Kiveris et al.,
-      "Connected Components in MapReduce and Beyond", 2014) —
-      O(log n) rounds INDEPENDENT of diameter, each star op one
-      window shuffle over the edge list.  The escape hatch the label
-      loop's non-convergence error names, and the right choice once
-      diameter grows past ~10: measured at the same 30k-edge budget,
-      star's wall time is FLAT as chains grow from diameter 15 to 49
-      (6.0s -> 6.8s) while label's grows 2.8x (8.4s -> 23.5s) and
-      fails loud past max_iter.
+    * a DFS path: each round is written to ``checkpoint_dir/round-NNNNN``
+      as parquet and read back — a fault-tolerant truncation with an
+      EXPLICIT lifecycle.  This deliberately does NOT use
+      ``DataFrame.checkpoint`` + ``setCheckpointDir``:
+      ``setCheckpointDir`` is a session-GLOBAL mutation that silently
+      redirects every other caller's checkpoints after we return, and
+      Spark only deletes reliable checkpoint files via
+      reference-tracking GC, so a multi-hour run would accumulate every
+      round on DFS.  Here round N-1 is deleted as soon as round N is
+      durable; on return only the symmetrized edge list (round-00000)
+      and the final round remain (the result reads from them — drop the
+      directory after consuming the result).  The directory must not
+      already contain round files (fail-loud ``mode("error")`` — reusing
+      a dir across runs would silently mix rounds).
     """
     if max_iter < 1:
         raise ValueError(f"max_iter={max_iter} must be >= 1")
-    if algorithm not in ("label", "star"):
-        raise ValueError(
-            f"algorithm={algorithm!r} must be 'label' or 'star'")
     spark = edges.sparkSession
     _round_no = 0
 
@@ -741,25 +709,13 @@ def connected_components(
 
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    # Pre-partition the pinned edge table on the per-round join key
-    # (r16, guide §2.4 "two operations keyed the same way can share one
-    # exchange"): localCheckpoint preserves outputPartitioning, so
-    # every round's sym⋈labels probe reuses this one setup shuffle
-    # instead of re-exchanging the FULL edge table each round — at
-    # scale the edge table is the big side of every round.  (In
-    # reliable/parquet mode the file round-trip drops partitioning and
-    # the round join plans its own exchange, exactly as before.)
-    sym = sym.repartition(F.col("b"))
     sym, _ = _pin(sym)  # referenced every round — never deleted mid-run
     if _after_edges_pinned is not None:
         # The edge lineage's own inputs are dead weight once sym is
         # durable: duplicate_clusters hooks this to delete its corpus-
-        # sized signature-tags file (r10 ADVICE finding 2 — it was
-        # retained, as the directory's LARGEST file, for the whole of
-        # the multi-hour preemptible runs reliable mode exists for).
+        # sized signature-tags file instead of retaining it for the
+        # whole of the long preemptible runs reliable mode exists for.
         _after_edges_pinned()
-    if algorithm == "star":
-        return _star_components(spark, sym, max_iter, _pin)
     labels, labels_path = _pin(
         sym.select(F.col("a").alias("node")).distinct()
         .withColumn("component", F.col("node"))
@@ -767,17 +723,13 @@ def connected_components(
     from pyspark.sql import Observation
 
     for _ in range(max_iter):
-        # One join + ONE aggregation per round (r16; the r15 shape was
-        # join → groupBy → second join): each node's new label is the
-        # min over {its own label} ∪ {neighbor labels}, so unioning the
-        # self rows into the neighbor rows folds the r15 label-update
-        # join into the existing aggregation — one fewer join (and its
-        # AQE stage job) per round.  The self row carries the old label
-        # in ``own`` (exactly one non-NULL per node; min() recovers
-        # it), so the convergence flag stays in-row: labels only ever
-        # decrease, so new < old ⇔ some neighbor label beat the old
-        # one — iteration count and labels are provably unchanged
-        # (min(own ∪ nbrs) ≡ least(old, coalesce(nbr_min, old))).
+        # One join + ONE aggregation per round: each node's new label is
+        # the min over {its own label} ∪ {neighbor labels}, so unioning
+        # the self rows into the neighbor rows folds the label update
+        # into the aggregation.  The self row carries the old label in
+        # ``own`` (exactly one non-NULL per node; min() recovers it), so
+        # the convergence flag stays in-row: labels only ever decrease,
+        # so new < old ⇔ some neighbor label beat the old one.
         nbr = sym.join(
             labels.select(F.col("node").alias("b"),
                           F.col("component").alias("c")),
@@ -800,11 +752,9 @@ def connected_components(
             )
         )
         # The convergence probe rides the pin action itself as an
-        # observed metric (r16): the r15 ``isEmpty`` probe on the
-        # checkpointed result was one extra driver-sequential job per
-        # round — with ~40 sub-100 ms jobs per run, job LAUNCHES are
-        # the local bottleneck (profile: job-duration sum ≈ half the
-        # wall; the rest is driver latency between jobs).
+        # observed metric: a separate probe job per round would add one
+        # more driver-sequential job launch, the local bottleneck of
+        # this loop.
         obs = Observation()
         new_labels, new_path = _pin(
             new_labels.observe(obs, F.max("_changed").alias("changed")))
@@ -816,24 +766,22 @@ def connected_components(
         labels, labels_path = new_labels.drop("_changed"), new_path
         if not changed:
             return labels.select(F.col("node"), F.col("component"))
-    # Silent non-convergence would split one duplicate cluster into
-    # several "canonical" representatives — fail loudly instead.
-    raise RuntimeError(
-        f"connected_components did not converge within max_iter={max_iter} "
-        "rounds (labels still changing in the final round); the graph has "
-        "a component with diameter > max_iter — raise max_iter, or rerun "
-        "with algorithm='star' (O(log n) rounds independent of diameter)"
-    )
+    # Labels still moving: a component is longer than max_iter rounds of
+    # propagation can cover.  Star restarts from the pinned edges, so the
+    # last label round is dead weight.
+    if labels_path is not None:
+        _delete_path(spark, labels_path)
+    return _star_components(spark, sym, _pin)
 
 
-def _star_components(
-    spark: SparkSession, sym: DataFrame, max_iter: int, _pin
-) -> DataFrame:
-    """Alternating large-star/small-star rounds (Kiveris et al. 2014)
-    over the pinned symmetric edge list ``sym`` → min-id ``(node,
-    component)`` labels.  Called only by :func:`connected_components`
-    (``algorithm="star"``), which owns validation and the checkpoint
-    lifecycle (``_pin`` is its round-pinning closure).
+def _star_components(spark: SparkSession, sym: DataFrame, _pin) -> DataFrame:
+    """Alternating large-star/small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014) over the
+    pinned symmetric edge list ``sym`` → min-id ``(node, component)``
+    labels.  Called only by :func:`connected_components` when label
+    propagation has not converged within its ``max_iter`` rounds; the
+    caller owns the checkpoint lifecycle (``_pin`` is its round-pinning
+    closure) and the budget is ``_STAR_MAX_ROUNDS``.
 
     Each round: large-star hangs every neighbor LARGER than u off u's
     minimum; small-star re-hangs the smaller neighbors (and u itself)
@@ -848,7 +796,9 @@ def _star_components(
     roots are then the labels.  Every edge emitted by either star op
     has parent < child by construction, so the fixed-point star set is
     directly the (node, component) map for non-root nodes; roots and
-    isolated nodes (self-loop inputs) coalesce to themselves."""
+    isolated nodes (self-loop inputs) coalesce to themselves.  Not
+    reaching the fixed point within the budget raises: a silent split
+    would hand one duplicate cluster several canonical representatives."""
     from pyspark.sql.window import Window
 
     # Canonical undirected edges (hi, lo), self-loops dropped: sym holds
@@ -861,9 +811,7 @@ def _star_components(
     n_e = E.count()
     nodes = sym.select(F.col("a").alias("node")).distinct()
     w_u = Window.partitionBy("u")
-    for _ in range(max_iter):
-        if n_e == 0:
-            break
+    for _ in range(_STAR_MAX_ROUNDS):
         # Large-star: for each u, m = min(Γ(u) ∪ {u}); emit (v, m) for
         # v ∈ Γ(u), v > u.  m <= u < v keeps (hi, lo) canonical.
         bidir = E.select(F.col("hi").alias("u"), F.col("lo").alias("v")).union(
@@ -904,15 +852,12 @@ def _star_components(
                 "node",
                 F.coalesce("component", F.col("node")).alias("component"),
             )
-    if n_e == 0:
-        # Edgeless graph (only self-loops survived canonicalization):
-        # every node is its own component.
-        return nodes.withColumn("component", F.col("node"))
     raise RuntimeError(
-        f"connected_components(algorithm='star') did not reach a fixed "
-        f"point within max_iter={max_iter} rounds ({n_e} edges in the "
-        "working set); this exceeds the O(log n) bound for any realistic "
-        "graph — raise max_iter and report the graph shape"
+        f"connected_components did not converge: labels were still "
+        f"changing after the label rounds and {_STAR_MAX_ROUNDS} "
+        f"large-star/small-star rounds left {n_e} edges short of a fixed "
+        "point, past the O(log n) bound for any realistic graph — report "
+        "the graph shape"
     )
 
 
@@ -927,7 +872,6 @@ def duplicate_clusters(
     parallelism: int | None = None,
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    algorithm: str = "label",
 ) -> DataFrame:
     """Duplicate clusters ``(node, component)`` — result-identical to
     ``connected_components(minhash_lsh_pairs(df))`` but safe under
@@ -951,7 +895,7 @@ def duplicate_clusters(
     3. band keys + bucket self-join over REPRESENTATIVES only (the
        banding step reuses the shuffled signature columns — the corpus
        text is scanned exactly once, in step 1);
-    4. min-label components over (rep pairs UNION star edges).
+    4. :func:`connected_components` over (rep pairs UNION star edges).
 
     Result equivalence is exact, not approximate: documents with equal
     signatures share every band key, so each signature group is a clique
@@ -1003,7 +947,7 @@ def duplicate_clusters(
     )
     return connected_components(
         edges, max_iter=max_iter, checkpoint_dir=checkpoint_dir,
-        algorithm=algorithm, _after_edges_pinned=after_edges_pinned)
+        _after_edges_pinned=after_edges_pinned)
 
 
 def duplicate_cluster_edges(

@@ -70,23 +70,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def with_ingest_ordinal(df: DataFrame, *, name: str = "_ordinal") -> DataFrame:
-    """Attach a strictly increasing ordinal reflecting scan order.
-
-    The reference's output preserves source row order and its
-    ``self[...]`` A1 addresses depend on it (``main.gs:69,118``); Spark
-    DataFrames are unordered, so order-dependent features (xlsx
-    pass-through, order-faithful exports) sort by this ordinal.  Values
-    follow (partition, row) scan order — stable for a given file layout,
-    not dense.
-    """
-    return df.withColumn(name, F.monotonically_increasing_id())
-
-
 def read_csv(
     spark: SparkSession, path: str, *, fidelity: bool = False,
     schema=None, multiline: bool | None = None, **options: str

@@ -184,12 +184,14 @@ def test_stratified_hash_sample_rates_and_determinism(spark):
         assert abs(frac - pct / 100) < 0.03, (flag, frac)
 
 
-def test_connected_components_nonconvergence_raises(spark):
-    """Exhausting max_iter with labels still moving must fail loudly —
-    silently splitting one cluster into several canonical reps is the
-    failure mode dedup cannot detect downstream."""
+def test_connected_components_nonconvergence_raises(spark, monkeypatch):
+    """Exhausting both the label rounds and the star fallback's budget
+    with the graph still moving must fail loudly — silently splitting
+    one cluster into several canonical reps is the failure mode dedup
+    cannot detect downstream."""
     import pytest as _pytest
 
+    monkeypatch.setattr(DD, "_STAR_MAX_ROUNDS", 1)
     chain = spark.createDataFrame([(i, i + 1) for i in range(6)], ["id_a", "id_b"])
     with _pytest.raises(RuntimeError, match="did not converge"):
         DD.connected_components(chain, max_iter=2)
@@ -221,12 +223,39 @@ def test_connected_components_chain_triangle_pair(spark):
                    20: 20, 21: 20, 22: 20, 30: 30, 31: 30}
 
 
+def test_components_edge_pin_runs_only_the_distinct_shuffle(spark):
+    """Pinning the symmetrized edge list runs one shuffle, the
+    ``distinct``'s, and then the pin itself.  A pre-partition on the
+    round-join key would add a second full-edge shuffle for nothing:
+    the pinned edges report no partitioning, so every round's join
+    re-exchanges them anyway."""
+    sc = spark.sparkContext
+    edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)],
+                                  "id_a long, id_b long")
+    sc.setJobGroup("cc-edge-pin", "cc-edge-pin")
+    try:
+        DD.connected_components(
+            edges, _after_edges_pinned=lambda: sc.setJobGroup(
+                "cc-rounds", "cc-rounds")).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    stages = {s for j in tracker.getJobIdsForGroup("cc-edge-pin")
+              for s in tracker.getJobInfo(j).stageIds}
+    ran = sorted(s for s in stages
+                 if tracker.getStageInfo(s).numCompletedTasks > 0)
+    # the distinct's shuffle-map stage + the localCheckpoint result stage
+    assert len(ran) == 2, ran
+
+
 def test_star_components_equals_label_propagation(spark):
-    """algorithm='star' (alternating large-star/small-star, Kiveris et
-    al. 2014) must produce EXACTLY the min-label labels on every graph
-    shape the label tests cover — chains, triangles, cliques (the
-    megadup shape), self-loops/isolated nodes, id-reversed chains, and
-    a seeded random graph."""
+    """The star fallback (alternating large-star/small-star, Kiveris et
+    al. 2014; forced by max_iter=1, which leaves labels moving on any
+    graph with an edge) must produce EXACTLY the min-label labels on
+    every graph shape the label tests cover — chains, triangles, cliques
+    (the megadup shape), self-loops/isolated nodes, id-reversed chains,
+    and a seeded random graph."""
     import random
 
     rng = random.Random(11)
@@ -246,15 +275,16 @@ def test_star_components_equals_label_propagation(spark):
                for r in DD.connected_components(edges, max_iter=40).collect()}
         star = {(r["node"], r["component"])
                 for r in DD.connected_components(
-                    edges, algorithm="star").collect()}
+                    edges, max_iter=1).collect()}
         assert lab == star, f"{name}: {sorted(lab ^ star)[:10]}"
 
 
 def test_components_property_vs_union_find(spark):
-    """Property fuzz (r11): BOTH round structures must equal a trivial
-    pure-Python union-find on arbitrary small graphs — duplicate edges,
-    reversed orientations, self-loops, isolated stars, whatever
-    Hypothesis finds.  Comparing both against an independent model is
+    """Property fuzz: BOTH round structures — label propagation to
+    convergence (max_iter=40) and the star fallback (max_iter=1) — must
+    equal a trivial pure-Python union-find on arbitrary small graphs:
+    duplicate edges, reversed orientations, self-loops, isolated stars,
+    whatever Hypothesis finds.  Comparing both against an independent model is
     stronger than star==label alone (a shared defect cannot hide)."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
@@ -280,42 +310,39 @@ def test_components_property_vs_union_find(spark):
                 parent[max(ra, rb)] = min(ra, rb)
         expected = {(n, find(n)) for n in list(parent)}
         df = spark.createDataFrame(edges, "id_a long, id_b long")
-        for algo in ("label", "star"):
+        for max_iter in (40, 1):
             got = {(r["node"], r["component"])
                    for r in DD.connected_components(
-                       df, max_iter=40, algorithm=algo).collect()}
-            assert got == expected, (algo, sorted(got ^ expected)[:8])
+                       df, max_iter=max_iter).collect()}
+            assert got == expected, (max_iter, sorted(got ^ expected)[:8])
 
     run()
 
 
-def test_star_components_converges_where_label_cannot(spark):
-    """The documented escape hatch: a 200-node chain (diameter 199)
-    exceeds any reasonable label max_iter but the star formulation
-    contracts it in O(log n) rounds under the SAME budget."""
-    import pytest as _pytest
-
+def test_star_components_converges_where_label_cannot(spark, tmp_path):
+    """A 200-node chain (diameter 199) exceeds the default 25 label
+    rounds; the default call finishes it through the star fallback,
+    which contracts it in O(log n) rounds — in both checkpoint modes,
+    with reliable mode keeping only the sym pin and the final round."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 200)], "id_a long, id_b long")
-    with _pytest.raises(RuntimeError, match="algorithm='star'"):
-        DD.connected_components(chain, max_iter=25).collect()
+    want = {i: 1 for i in range(1, 201)}
     got = {r["node"]: r["component"]
-           for r in DD.connected_components(
-               chain, max_iter=25, algorithm="star").collect()}
-    assert got == {i: 1 for i in range(1, 201)}
-
-
-def test_star_components_validates_algorithm(spark):
-    import pytest as _pytest
-
-    edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with _pytest.raises(ValueError, match="'label' or 'star'"):
-        DD.connected_components(edges, algorithm="bfs")
+           for r in DD.connected_components(chain).collect()}
+    assert got == want
+    ckpt = tmp_path / "ckpt"
+    reliable = {r["node"]: r["component"]
+                for r in DD.connected_components(
+                    chain, checkpoint_dir=str(ckpt)).collect()}
+    assert reliable == want
+    rounds = sorted(p.name for p in ckpt.iterdir())
+    assert len(rounds) == 2 and rounds[0] == "round-00000", rounds
 
 
 def test_star_components_reliable_checkpoint_mode(spark, tmp_path):
-    """The star loop must honor the same explicit parquet round
-    lifecycle as the label loop: superseded rounds deleted, the result
+    """The star fallback (forced by max_iter=1) must honor the same
+    explicit parquet round lifecycle as the label loop: superseded
+    rounds — the last label round included — deleted, the result
     readable from the surviving files, session checkpoint dir
     untouched."""
     edges = spark.createDataFrame(
@@ -324,18 +351,19 @@ def test_star_components_reliable_checkpoint_mode(spark, tmp_path):
     before_ckpt_dir = spark.sparkContext.getCheckpointDir()
     local = {(r["node"], r["component"])
              for r in DD.connected_components(
-                 edges, algorithm="star").collect()}
+                 edges, max_iter=1).collect()}
     ckpt = tmp_path / "ckpt"
     reliable_df = DD.connected_components(
-        edges, algorithm="star", checkpoint_dir=str(ckpt))
+        edges, max_iter=1, checkpoint_dir=str(ckpt))
     reliable = {(r["node"], r["component"]) for r in reliable_df.collect()}
     assert local == reliable
     assert {c for _, c in local} == {1, 100}
     assert spark.sparkContext.getCheckpointDir() == before_ckpt_dir
     rounds = sorted(p.name for p in ckpt.iterdir())
     # surviving: the sym pin (round-00000, referenced by the node set
-    # until the end) and the final edge round — superseded edge rounds
-    # (incl. the initial canonicalization) are deleted as they go.
+    # until the end) and the final edge round — the label rounds and
+    # the superseded edge rounds (incl. the initial canonicalization)
+    # are deleted as they go.
     assert len(rounds) == 2 and rounds[0] == "round-00000", rounds
     assert reliable_df.count() == len(local)
 
@@ -368,12 +396,12 @@ def test_duplicate_clusters_equals_naive_path(spark):
     # The mega-cluster is one component labelled by its min id, and every
     # injected doc is in it.
     assert {(1_000_000 + i, 1_000_000) for i in range(200)} <= collapsed
-    # r11: the star round structure must compose with the collapsed
-    # edge build end-to-end (the long-chain deployment path) and give
-    # the identical clustering.
+    # The star fallback (forced by max_iter=1) must compose with the
+    # collapsed edge build end-to-end (the long-chain deployment path)
+    # and give the identical clustering.
     star = {(r["node"], r["component"])
             for r in DD.duplicate_clusters(
-                docs, "text", "doc_id", algorithm="star", **kw).collect()}
+                docs, "text", "doc_id", max_iter=1, **kw).collect()}
     assert star == naive
 
     # Edge accounting: 200 identical docs cost the naive path
@@ -572,20 +600,22 @@ def test_salted_join_accepts_spark_mode_aliases(spark):
 
 
 def test_ivf_recall_against_bruteforce(spark):
-    """KMeans-IVF with nprobe=half the lists must recover most of the true
-    top-k on the real embeddings table."""
+    """IVF (bounded-sample spherical k-means centroids) with nprobe=half
+    the lists must recover most of the true top-k on the real embeddings
+    table."""
     from spreadsheet_etl_engine_spark.sources.readers import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     exact = SIM.topk_bruteforce(emb, queries, "embedding", "vec_id", k=5)
     approx = SIM.topk_ivf(emb, queries, "embedding", "vec_id",
-                          k=5, nlist=8, nprobe=4, spill=2, kmeans=True)
+                          k=5, nlist=8, nprobe=4, spill=2)
     truth = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     got = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(truth & got) / len(truth)
-    # Measured 0.96 at this config (spherical-kmeans buckets + spill=2
-    # corpus replication) and 0.93-0.96 across the 10x scale probe; the
+    # Measured 0.94 at this config (sample-trained spherical-kmeans
+    # buckets + spill=2 corpus replication; MLlib-trained buckets read
+    # 0.96) and 0.93-0.96 across the 10x scale probe; the
     # floor keeps ~half that margin (r8 verdict item 6) so a silent
     # quality regression fails well before recall halves.
     assert recall >= 0.9, f"IVF recall too low: {recall}"
@@ -741,7 +771,7 @@ def test_ivfpq_persisted_index_partition_pruning(spark, tmp_path):
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     cents, books = SIM.train_ivfpq(emb, "embedding", nlist=8, m=8,
-                                   ksub=256, kmeans=False)
+                                   ksub=256)
     idx_path = str(tmp_path / "ivfpq_index")
     (SIM.ivfpq_encode(emb.select("vec_id", "embedding"), "embedding",
                       cents, books)
@@ -818,38 +848,17 @@ def test_similarity_null_contracts_and_named_errors(spark):
     lite = SIM.train_centroids_lite(mix, "embedding", nlist=2)
     assert len(lite) == 2 and all(v is not None for c in lite for v in c)
     out = SIM.topk_ivf(mix, mix.filter(F.col("vec_id") == 1), "embedding",
-                       "vec_id", k=2, nlist=2, nprobe=2, kmeans=False)
+                       "vec_id", k=2, nlist=2, nprobe=2)
     assert {r["neighbor_id"] for r in out.collect()} == {3}
-    # cosine_pandas matches the expr form's NULL semantics too.
+    # LSH signature: NULL vector → NULL signature, never bucket 0.
     pairs = spark.createDataFrame(
         [(None, [1.0, 0.0]), ([1.0, 0.0], None), ([1.0, 0.0], [1.0, 0.0])],
         "a array<double>, b array<double>")
-    for r in pairs.select(
-            VEC.cosine(F.col("a"), F.col("b")).alias("ce"),
-            VEC.cosine_pandas(F.col("a"), F.col("b")).alias("cp")).collect():
-        assert (r["ce"] is None) == (r["cp"] is None)
-        if r["ce"] is not None:
-            assert abs(r["ce"] - r["cp"]) < 1e-12
-    # LSH signature: NULL vector → NULL signature, never bucket 0.
     planes = [[1.0, 0.0], [0.0, 1.0]]
     sigs = pairs.select(
         VEC.hyperplane_signature(F.col("a"), planes).alias("s")).collect()
     # [1,0] sits on the non-negative side of both planes (dot 1 and 0).
     assert sigs[0]["s"] is None and sigs[1]["s"] == 3 and sigs[2]["s"] == 3
-
-
-def test_cosine_pandas_matches_expr(spark):
-    from spreadsheet_etl_engine_spark.functions import vectors as VEC
-    from spreadsheet_etl_engine_spark.sources.readers import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").limit(50)
-    pair = emb.alias("a").crossJoin(emb.alias("b")).limit(200).select(
-        VEC.cosine(F.col("a.embedding"), F.col("b.embedding")).alias("c_expr"),
-        VEC.cosine_pandas(F.col("a.embedding"), F.col("b.embedding")).alias("c_pd"),
-    )
-    rows = pair.collect()
-    assert len(rows) == 200
-    assert all(abs(r["c_expr"] - r["c_pd"]) < 1e-12 for r in rows)
 
 
 def test_asof_join_directions(spark):
@@ -1492,9 +1501,8 @@ def test_oracle_blind_edge_fixes(spark):
     # zero-norm cosine: 0.0 by contract, never NULL.
     from spreadsheet_etl_engine_spark.functions import vectors as VEC
     z = spark.createDataFrame([([0.0, 0.0], [1.0, 2.0])], "a array<double>, b array<double>")
-    row = z.select(VEC.cosine(F.col("a"), F.col("b")).alias("c"),
-                   VEC.cosine_pandas(F.col("a"), F.col("b")).alias("cp")).collect()[0]
-    assert row["c"] == 0.0 and row["cp"] == 0.0
+    row = z.select(VEC.cosine(F.col("a"), F.col("b")).alias("c")).collect()[0]
+    assert row["c"] == 0.0
 
 
 def test_decimal_sum_domain_fails_loud(spark):
@@ -1703,34 +1711,6 @@ def test_checkpoint_dir_conf_reachable_from_registry(spark, sf_dir, tmp_path):
     names = sorted(p.name for p in runs[0].iterdir())
     assert "signature-tags" not in names and len(names) == 2, names
     assert names[0] == "round-00000", names
-
-
-def test_components_algorithm_conf_reachable_from_registry(spark, sf_dir):
-    """r11 (same lesson as the r9 checkpoint-dir item: an operator
-    parameter no registry caller can reach is not really shipped):
-    setting the session conf key must route dedup_components through
-    the star formulation with the identical result, and an invalid
-    value must fail loud at configuration time."""
-    from spreadsheet_etl_engine_spark.operators.dedup import (
-        COMPONENTS_ALGORITHM_CONF,
-    )
-    from spreadsheet_etl_engine_spark.registry import REGISTRY
-
-    fn = REGISTRY["dedup_components"].fn
-    base = {(r["node"], r["component"]) for r in fn(spark, sf_dir).collect()}
-    spark.conf.set(COMPONENTS_ALGORITHM_CONF, "star")
-    try:
-        star = {(r["node"], r["component"])
-                for r in fn(spark, sf_dir).collect()}
-    finally:
-        spark.conf.unset(COMPONENTS_ALGORITHM_CONF)
-    assert star == base and len(base) > 0
-    spark.conf.set(COMPONENTS_ALGORITHM_CONF, "bfs")
-    try:
-        with pytest.raises(ValueError, match="'label' or 'star'"):
-            fn(spark, sf_dir).collect()
-    finally:
-        spark.conf.unset(COMPONENTS_ALGORITHM_CONF)
 
 
 def test_text_unicode_hygiene_counts(spark, tmp_path):

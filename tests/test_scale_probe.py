@@ -161,13 +161,12 @@ def test_ratio_within_bound(spark, name):
 
 
 def test_star_components_flat_under_diameter_growth(spark):
-    """r11 (r10 verdict item 4): the algorithm='star' formulation must
-    stay ~flat as component diameter grows (recorded 1.13x from d15 to
-    d49 at a fixed 30k-edge budget, while label grew 2.8x and fails
-    loud past max_iter), and on the dup-shaped arm (star edges,
-    diameter 2 — the registry's real workload) the label default must
-    remain competitive (recorded: label 3.3s vs star 3.7s — why label
-    stays the default).  Runs last-ish: both algorithms leave
+    """The star fallback (forced with max_iter=1) must stay ~flat as
+    component diameter grows (recorded 1.13x from d15 to d49 at a fixed
+    30k-edge budget, while label grew 2.8x), and on the dup-shaped arm
+    (star edges, diameter 2 — the registry's real workload) label
+    propagation must remain competitive (recorded: label 3.3s vs star
+    3.7s — why label runs first).  Runs last-ish: both algorithms leave
     localCheckpoint residue, hence the explicit cleanup."""
     import scale_probe as SP
 
