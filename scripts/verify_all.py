@@ -21,6 +21,9 @@ failure so the table is complete):
   determinism scripts/determinism_sweep.py — every oracled query
               hash-identical under 3 shuffle-partition/AQE configs
               (partition-order-stability, mechanically)
+  counters    scripts/counters.py — every registry query and bench-only
+              line at sf0.01 on local[4]: jobs, tasks, shuffle bytes and
+              plan hash against BENCH_COUNTERS.json (~3 min)
   bench       python bench.py — the sf0.1 headline recording (one JSON
               line; pass/fail is exit code + parseable output only;
               self-qualifying idle gate)
@@ -56,6 +59,7 @@ STAGES: dict[str, tuple[list[str], dict[str, str]]] = {
     # zero signs, float-order sums, untied ranks) that the fixed-config
     # parity gates are blind to.
     "determinism": ([PY, "scripts/determinism_sweep.py"], {}),
+    "counters": ([PY, "scripts/counters.py"], {}),
     "bench": ([PY, "bench.py"], {}),
 }
 

@@ -62,6 +62,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from spreadsheet_etl_engine_spark.errors import FormulaSyntaxError
+from spreadsheet_etl_engine_spark.sources.xlsx_native import letters_to_ordinal
 
 # --- Tokenizer -----------------------------------------------------------
 
@@ -103,15 +104,6 @@ def _tokenize(src: str, rule: str) -> list[_Tok]:
 
 SrcResolver = Callable[[str], Column]
 SelfResolver = Callable[[str], Column]
-
-
-def a1_col_ordinal(letters: str) -> int:
-    """A1 column letters → 1-based ordinal (inverse of
-    ``sources.writers.column_letter``): A→1, Z→26, AA→27."""
-    n = 0
-    for ch in letters.upper():
-        n = n * 26 + (ord(ch) - 64)
-    return n
 
 
 class _Parser:
@@ -246,7 +238,7 @@ class _Parser:
                         "row-local templates (one row number per formula)",
                         self.rule)
                 self._a1_row = row
-                return self.resolve_a1(a1_col_ordinal(m.group(1)))
+                return self.resolve_a1(letters_to_ordinal(m.group(1)))
             # Bare names (TRUE/FALSE) — anything else is an error.
             if tok.text.upper() == "TRUE":
                 return F.lit(True)

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from spreadsheet_etl_engine_spark.plans.parser import (
     SELF_REF_RE, SRC_REF_RE, ColumnKind, MappingSpec,
 )
+from spreadsheet_etl_engine_spark.sources.xlsx_native import column_letter
 
 
 def write_parquet(df: DataFrame, path: str, *, partition_by: list[str] | None = None) -> None:
@@ -235,15 +236,6 @@ def write_zordered(
         .drop(kname)
         .write.mode("overwrite").parquet(path)
     )
-
-
-def column_letter(col: int) -> str:
-    """1-based column index → A1 letter (reference ``main.gs:291-299``)."""
-    letters = ""
-    while col > 0:
-        col, rem = divmod(col - 1, 26)
-        letters = chr(65 + rem) + letters
-    return letters
 
 
 def formula_passthrough_columns(source: DataFrame, spec: MappingSpec) -> DataFrame:

@@ -136,8 +136,10 @@ _ILLEGAL_XML_RE = re.compile("[\x00-\x08\x0b\x0c\x0e-\x1f]")
 
 
 def letters_to_ordinal(letters: str) -> int:
+    """A1 column letters → 1-based ordinal, the inverse of
+    ``column_letter``: A→1, Z→26, AA→27 (case-insensitive)."""
     n = 0
-    for ch in letters:
+    for ch in letters.upper():
         n = n * 26 + (ord(ch) - 64)
     return n
 

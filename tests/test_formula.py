@@ -88,12 +88,13 @@ def test_a1_compiled_template(spark):
 
 
 def test_a1_col_ordinal():
-    from spreadsheet_etl_engine_spark.plans.formula import a1_col_ordinal
+    from spreadsheet_etl_engine_spark.sources.xlsx_native import letters_to_ordinal
 
-    assert a1_col_ordinal("A") == 1
-    assert a1_col_ordinal("Z") == 26
-    assert a1_col_ordinal("AA") == 27
-    assert a1_col_ordinal("AAA") == 703
+    assert letters_to_ordinal("A") == 1
+    assert letters_to_ordinal("Z") == 26
+    assert letters_to_ordinal("AA") == 27
+    assert letters_to_ordinal("AAA") == 703
+    assert letters_to_ordinal("aa") == 27
 
 
 def test_syntax_errors(spark):
