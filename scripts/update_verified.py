@@ -5,7 +5,8 @@
 query whose fingerprint now differs inside the check window
 (see ``spreadsheet_etl_engine_spark/checkwindow.py``).  Run this at the
 commit the check verified, with that round's correctness report; entries
-without a newer green row are kept:
+without a newer green row are kept.  The query inventory in COVERAGE.md,
+whose "green" column comes from this file, is regenerated with it:
 
     python scripts/update_verified.py CORRECTNESS_r17.json
 """
@@ -20,6 +21,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from scripts import inventory  # noqa: E402
 from spreadsheet_etl_engine_spark import checkwindow, registry  # noqa: E402
 
 PATH = os.path.join(ROOT, "verified.json")
@@ -50,6 +52,7 @@ def main(reports: list[str]) -> None:
         f.write("{\n" + ",\n".join(f" {json.dumps(n)}: {json.dumps(v)}"
                                    for n, v in entries) + "\n}\n")
     print(f"{len(entries)} of {len(registry.REGISTRY)} queries verified -> {PATH}")
+    inventory.write()
 
 
 if __name__ == "__main__":

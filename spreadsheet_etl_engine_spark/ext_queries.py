@@ -3113,24 +3113,32 @@ def events_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Cohort retention: users grouped by first-activity week, counted "
         "per week-offset of return activity — the standard retention "
         "triangle.  Distinct (user, week) activity first (collapses "
-        "event volume to user-weeks BEFORE any join), then a keyed join "
-        "against the per-user cohort and a low-cardinality agg.  Week "
-        "boundaries anchor to a fixed epoch date so bucketing is "
+        "event volume to user-weeks), then each user's cohort week as a "
+        "window min over that user's weeks and a low-cardinality agg.  "
+        "Week boundaries anchor to a fixed epoch date so bucketing is "
         "engine-reproducible.",
 )
 def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NULL-ts events excluded (r9 review find): an unknowable week is not
-    # return activity; mirrors the oracle's filter.
-    ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    from pyspark.sql.window import Window
+
+    # NULL-ts events excluded: an unknowable week is not return activity;
+    # mirrors the oracle's filter.  NULL user ids are excluded too: the
+    # oracle's join drops them, and the window would count them as a
+    # zero-user cohort row.
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("ts").isNotNull() & F.col("user_id").isNotNull())
     act = ev.select(
         "user_id",
         F.floor(
             F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")) / 7
         ).alias("wk"),
     ).distinct()
-    cohort = act.groupBy("user_id").agg(F.min("wk").alias("cohort_wk"))
+    # A window, not an aggregate joined back: adaptive execution would
+    # broadcast whichever join side finished first, so the job count
+    # depended on timing.
+    cohort_wk = F.min("wk").over(Window.partitionBy("user_id"))
     return (
-        act.join(cohort, "user_id")
+        act.withColumn("cohort_wk", cohort_wk)
         .groupBy("cohort_wk", (F.col("wk") - F.col("cohort_wk")).alias("week_offset"))
         .agg(F.countDistinct("user_id").alias("n_users"))
     )

@@ -784,24 +784,29 @@ def join_fact_fact_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Create-or-reuse bucketed copies of orders/lineitem for ``sf_dir``.
 
-    The bucketed layout is an ingest-time artifact; within one session it
-    is built once per scale factor (catalog lookup) and reused.  Files
-    live under /tmp keyed by the source dir, so a stale catalog entry
-    whose files vanished is rebuilt via mode("overwrite").
+    The bucketed layout is an ingest-time artifact; within one Spark
+    application it is built once per scale factor (catalog lookup) and
+    reused.  The files live under /tmp in a directory named after the
+    application and the source dir: the catalog entry that reuses them
+    lives exactly as long as the application, a concurrent application
+    never overwrites them, and the directory is deleted when the JVM's
+    file systems close.
     """
     import hashlib
 
     from spreadsheet_etl_engine_spark.sources.writers import write_bucketed
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    app_dir = f"/tmp/spark_graft_buckets/{spark.sparkContext.applicationId}"
     names = []
     for tbl, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
         name = f"bkt_{tbl}_{tag}"
         if not spark.catalog.tableExists(name):
-            write_bucketed(
-                load_table(spark, sf_dir, tbl), name,
-                f"/tmp/spark_graft_buckets/{tag}/{tbl}", buckets=8, key=key,
-            )
+            write_bucketed(load_table(spark, sf_dir, tbl), name,
+                           f"{app_dir}/{tag}/{tbl}", buckets=8, key=key)
+            path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(app_dir)
+            path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()) \
+                .deleteOnExit(path)
         names.append(name)
     return names[0], names[1]
 

@@ -42,6 +42,8 @@ from pyspark.sql.types import (
     LongType, StringType, StructField, StructType,
 )
 
+from spreadsheet_etl_engine_spark.streaming.events import check_stream_columns
+
 DOC_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -131,21 +133,9 @@ def read_document_stream(
     spark: SparkSession, path: str, *, max_files_per_trigger: int = 8
 ) -> DataFrame:
     """File-source stream of document parquet files under ``path`` —
-    the documents-table sibling of ``events.read_event_stream``, same
-    construction-time column-name validation (a renamed field in a
-    by-name format would otherwise read all-NULL forever)."""
-    import glob
-    import os
-
-    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-    if files:
-        present = set(spark.read.parquet(files[0]).columns)
-        missing = [f.name for f in DOC_SCHEMA.fields if f.name not in present]
-        if missing:
-            raise ValueError(
-                f"document stream at {path!r} is missing column(s) "
-                f"{missing}; present: {sorted(present)}"
-            )
+    the documents-table sibling of ``events.read_event_stream``, checked
+    against ``DOC_SCHEMA`` the same way (``events.check_stream_columns``)."""
+    check_stream_columns(spark, path, DOC_SCHEMA, "document")
     return (
         spark.readStream.schema(DOC_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spreadsheet_etl_engine_spark.errors import EngineError
 from spreadsheet_etl_engine_spark.functions.numeric import finite_or_fail
 from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType, TimestampType,
@@ -38,52 +39,50 @@ EVENT_SCHEMA = StructType(
 )
 
 
+def check_stream_columns(
+    spark: SparkSession, path: str, schema: StructType, what: str
+) -> None:
+    """Fail loud if the parquet files under ``path`` lack a column of
+    ``schema``.
+
+    A parquet stream resolves columns by name, so a renamed field would
+    read as all-NULL in every micro-batch with nothing failing.  The
+    probe is a batch read through Spark, so it sees every path Spark
+    can read (local, ``file:``, ``hdfs://``, ``s3a://``).  Limits: files
+    arriving after construction are not re-checked (pair the stream with
+    a ``not_null`` quality constraint on required fields), and an empty
+    or missing directory is not checked (a stream may start before its
+    first file).  Every other read failure, such as a corrupt footer or
+    a denied permission, propagates.
+    """
+    from pyspark.errors import AnalysisException
+
+    try:
+        present = set(spark.read.parquet(path).schema.names)
+    except AnalysisException as exc:
+        if (exc.getCondition() or "") not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
+        return
+    missing = [f.name for f in schema.fields if f.name not in present]
+    if missing:
+        raise EngineError(
+            f"{what} stream at {path}: columns {missing} missing from the "
+            f"files present (found {sorted(present)}); a parquet stream "
+            "would silently read them as NULL."
+        )
+
+
 def read_event_stream(
-    spark: SparkSession, path: str, *, max_files_per_trigger: int = 8,
-    validate_schema: bool = True
+    spark: SparkSession, path: str, *, max_files_per_trigger: int = 8
 ) -> DataFrame:
-    """File-source stream of event parquet files under ``path``.
+    """File-source stream of event parquet files under ``path``, checked
+    against ``EVENT_SCHEMA`` at construction (``check_stream_columns``).
 
     ``maxFilesPerTrigger`` keeps micro-batches bounded when backfilling a
     large directory (tests set 1 to force one file per micro-batch so
     watermark advancement between batches is observable).
-
-    ``validate_schema`` (default on) checks the files PRESENT AT
-    CONSTRUCTION against ``EVENT_SCHEMA`` by column NAME and fails loud
-    on a missing/renamed column — a parquet stream resolves columns by
-    name, so a renamed field would otherwise read as all-NULL in every
-    micro-batch with nothing failing (r9 review find).  Honest limits:
-    files arriving AFTER construction are not re-validated (the standard
-    streaming posture — pair with a not_null quality constraint on
-    required fields inside the pipeline for full drift coverage), and an
-    empty directory skips the check (a stream may legitimately start
-    before its first file).
     """
-    if validate_schema:
-        from pyspark.errors import AnalysisException
-
-        try:
-            present = set(spark.read.parquet(path).schema.names)
-        except AnalysisException as exc:
-            # Only the two empty/missing-path shapes may skip validation
-            # (a stream may legitimately start before its first file);
-            # everything else — corrupt footer, permission denied — is a
-            # genuine failure and must propagate, not silently disable
-            # the check (r9 advice finding).
-            cond = exc.getCondition() or ""
-            if cond not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-                raise
-            present = None  # no files yet — nothing to validate
-        if present is not None:
-            missing = [f.name for f in EVENT_SCHEMA.fields
-                       if f.name not in present]
-            if missing:
-                from spreadsheet_etl_engine_spark.errors import EngineError
-                raise EngineError(
-                    f"event stream at {path}: columns {missing} missing "
-                    f"from the files present (found {sorted(present)}) — "
-                    "a parquet stream would silently read them as NULL."
-                )
+    check_stream_columns(spark, path, EVENT_SCHEMA, "event")
     return (
         spark.readStream.schema(EVENT_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)

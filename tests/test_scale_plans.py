@@ -96,6 +96,23 @@ def test_registered_bucketed_join_has_zero_exchange(spark, sf_dir):
     assert "Bucketed: true" in plan
 
 
+def test_bucketed_copies_are_scoped_to_the_application(spark, sf_dir, monkeypatch):
+    """Two applications that build the bucketed copies of one sf directory
+    at once must not write the same files, so their path names the
+    application that owns the catalog entry."""
+    from pyspark.sql.catalog import Catalog
+
+    from spreadsheet_etl_engine_spark.sources import writers
+
+    paths = []
+    monkeypatch.setattr(Catalog, "tableExists", lambda self, name, *a: False)
+    monkeypatch.setattr(writers, "write_bucketed",
+                        lambda df, table, path, **kw: paths.append(path))
+    registry._bucketed_fact_tables(spark, sf_dir)
+    app = spark.sparkContext.applicationId
+    assert len(paths) == 2 and all(app in p for p in paths), paths
+
+
 def test_curation_query_plans(spark, sf_dir):
     """Scale-shape pins for the r4 curation queries: column pruning on the
     documents scan, broadcast of the benchmark gram set, and bucketed

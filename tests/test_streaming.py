@@ -785,6 +785,7 @@ def test_band_candidates_stream_max_bucket_caps_state(spark, tmp_path):
 
 
 def test_read_document_stream_validates_columns(spark, tmp_path):
+    from spreadsheet_etl_engine_spark.errors import EngineError
     from spreadsheet_etl_engine_spark.streaming import dedup as SD
 
     bad = spark.createDataFrame(
@@ -792,8 +793,23 @@ def test_read_document_stream_validates_columns(spark, tmp_path):
     )
     src = str(tmp_path / "bad_docs")
     bad.write.parquet(src)
-    with pytest.raises(ValueError, match="missing column"):
+    with pytest.raises(EngineError, match="doc_id"):
         SD.read_document_stream(spark, src)
+
+
+def test_read_document_stream_validates_columns_of_a_uri(spark, tmp_path):
+    """The column check reads through Spark, so a path given as a URI
+    (``file:``, ``hdfs://``, ``s3a://``) is checked like a local one."""
+    from spreadsheet_etl_engine_spark.errors import EngineError
+    from spreadsheet_etl_engine_spark.streaming import dedup as SD
+
+    src = tmp_path / "renamed_docs"
+    spark.createDataFrame(
+        [(1, "txt", "en", "s", 3)],
+        "document_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(str(src))
+    with pytest.raises(EngineError, match="doc_id"):
+        SD.read_document_stream(spark, src.as_uri())
 
 
 def test_stream_state_partitions_scaling_and_conf(spark):
