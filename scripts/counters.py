@@ -18,10 +18,8 @@ id is above the last job id seen before it started, whatever its job group.
 Without ``--write`` the script prints every row whose fields moved, with the
 old and new values, and exits 1 on any move.  ``jobs``, ``tasks`` and
 ``plan_sha`` must repeat exactly; ``shuffle_bytes`` within
-``SHUFFLE_TOLERANCE``.  The baseline's ``report_only`` map names the fields
-of a row that do not repeat across fresh processes, with the reason; those
-are printed when they move but do not fail the run.  With one name the
-script also prints that line's normalized plan and a per-job table.
+``SHUFFLE_TOLERANCE``.  With one name the script also prints that line's
+normalized plan and a per-job table.
 """
 
 from __future__ import annotations
@@ -148,19 +146,16 @@ def moved(old: dict, new: dict) -> list[str]:
     return out
 
 
-def write_baseline(rows: dict[str, dict], report_only: dict[str, dict]) -> None:
+def write_baseline(rows: dict[str, dict]) -> None:
     """One row per line of the file, so a re-pin diffs row by row."""
     conditions = {"sf_dir": os.path.basename(SF_DIR), "master": MASTER,
                   "shuffle_partitions": SHUFFLE_PARTITIONS, "sink": "noop",
                   "shuffle_bytes_rel_tolerance": SHUFFLE_TOLERANCE}
 
-    def block(d):
-        return ",\n".join(f"  {json.dumps(n)}: {json.dumps(d[n])}" for n in sorted(d))
-
+    block = ",\n".join(f"  {json.dumps(n)}: {json.dumps(rows[n])}" for n in sorted(rows))
     with open(BASELINE, "w") as f:
         f.write(f'{{\n "conditions": {json.dumps(conditions)},\n'
-                f' "report_only": {{\n{block(report_only)}\n }},\n'
-                f' "rows": {{\n{block(rows)}\n }}\n}}\n')
+                f' "rows": {{\n{block}\n }}\n}}\n')
 
 
 def main() -> int:
@@ -175,17 +170,16 @@ def main() -> int:
         return 2
     names = args.names or known
 
-    doc = {"rows": {}, "report_only": {}}
+    baseline = {}
     if os.path.exists(BASELINE):
         with open(BASELINE) as f:
-            doc = json.load(f)
-    baseline, report_only = doc["rows"], doc["report_only"]
+            baseline = json.load(f)["rows"]
     rows = measure(names, detail=len(args.names) == 1)
 
     if args.write:
         if args.names:
             rows = {**baseline, **rows}
-        write_baseline(rows, report_only)
+        write_baseline(rows)
         print(f"wrote {len(rows)} rows to {os.path.basename(BASELINE)}")
         return 0
 
@@ -196,11 +190,9 @@ def main() -> int:
             print(f"{name}: not in the baseline: {new}")
             bad += 1
             continue
-        unpinned = report_only.get(name, {}).get("fields", [])
         for field in moved(old, new):
-            print(f"{name}.{field}: {old.get(field)} -> {new[field]}"
-                  + (" (report-only)" if field in unpinned else ""))
-            bad += field not in unpinned
+            print(f"{name}.{field}: {old.get(field)} -> {new[field]}")
+            bad += 1
     if not args.names:
         for name in sorted(set(baseline) - set(rows)):
             print(f"{name}: in the baseline but no longer a line")

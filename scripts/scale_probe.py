@@ -486,9 +486,9 @@ def probe_stardiam(spark: SparkSession, reps: int, n: int) -> dict:
 
 
 def probe_statefulstream(spark: SparkSession, reps: int, n: int) -> dict:
-    """running_user_totals (applyInPandasWithState) as a REAL availableNow
-    stream at n and 10n events, users growing with the corpus (n/100
-    keys): state rows, groups per batch and Arrow transfer all grow 10x
+    """running_user_totals (a streaming aggregation) as a REAL
+    availableNow stream at n and 10n events, users growing with the
+    corpus (n/100 keys): state rows and per-batch state updates grow 10x
     while the file/trigger layout (8 files, 2 per trigger = 4
     micro-batches) stays fixed, so the ratio measures per-batch state
     and transfer growth, not micro-batch scheduling.  Sink is noop

@@ -459,10 +459,12 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         "This is the end-to-end flow a user runs: every stage is the "
         "already-verified operator (dedup_components, text_stats, "
         "train_split_assign) composed in one plan; the components output "
-        "and the per-cluster winner are each key-joined once, nothing "
-        "rescans the corpus per stage.",
+        "is key-joined once and the per-cluster winner is a window over "
+        "that join, nothing rescans the corpus per stage.",
 )
 def curation_pipeline_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.window import Window
+
     docs = load_table(spark, sf_dir, "documents")
     # Same r10 rerouting as dedup_components: the collapsed-signature
     # cluster path (mega-duplicate-safe), result-identical to the old
@@ -488,18 +490,18 @@ def curation_pipeline_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = d.join(comp, d.doc_id == comp.node, "left").withColumn(
         "_comp", F.coalesce(F.col("component"), F.col("doc_id"))
     )
-    # Survivorship (r9 review find): the cluster representative is the
-    # min-id member that PASSES the quality filter.  The old rule (min id
-    # of the whole cluster) could annihilate a cluster entirely: every
-    # other member dropped as near_dup of a representative that was then
-    # itself dropped as short.  The winner map is one |docs|-keyed agg +
-    # join — same scale class as the components join above.
-    winners = (
-        j.filter(F.col("n_tok") >= 5)
-        .groupBy(F.col("_comp").alias("_wcomp"))
-        .agg(F.min("doc_id").alias("_winner"))
+    # Survivorship: the cluster representative is the min-id member that
+    # PASSES the quality filter.  Min id of the whole cluster could
+    # annihilate a cluster entirely: every other member dropped as
+    # near_dup of a representative that was then itself dropped as short.
+    # A window over the cluster needs no second join (so no adaptive
+    # re-plan of one); a cluster with no passing member gets a NULL
+    # winner.
+    j = j.withColumn(
+        "_winner",
+        F.min(F.when(F.col("n_tok") >= 5, F.col("doc_id")))
+        .over(Window.partitionBy("_comp")),
     )
-    j = j.join(winners, j._comp == winners._wcomp, "left")
     decision = (
         F.when(F.col("n_tok") < 5, "drop:short")
         .when(F.col("doc_id") != F.col("_winner"), "drop:near_dup")
@@ -1581,9 +1583,9 @@ def streaming_view_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming_stateful_totals",
     # The stateful operator is deterministic in its FINAL per-user row:
     # n_events is an exact count, and the operator accumulates integer
-    # cents under the engine-wide decimal(18,2) measure contract (cast
-    # Spark-side, summed as exact Python ints — see
-    # running_user_totals' docstring), so the last emitted row per user
+    # cents under the engine-wide decimal(18,2) measure contract (summed
+    # as decimal(38,0) — see running_user_totals' docstring), so the
+    # last emitted row per user
     # (the one with max n_events — n strictly increases across
     # micro-batches) carries a sum that is arrival-order-independent
     # and bit-identical to the oracle's exact decimal sum cast to
@@ -1600,12 +1602,12 @@ def streaming_view_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id
     """,
-    doc="Custom stateful streaming operator (applyInPandasWithState) "
-        "executed as a real Structured Streaming query: running per-user "
-        "event count and value sum, file source, availableNow, update-"
-        "mode memory sink, 2 files per micro-batch so most users' state "
-        "is restored and updated across batches rather than created "
-        "once (streaming/events.py:running_user_totals).",
+    doc="Running per-user event count and exact value sum as a "
+        "streaming aggregation (one state row per user id) executed as "
+        "a real Structured Streaming query: file source, availableNow, "
+        "update-mode memory sink, 2 files per micro-batch so most users' "
+        "state is restored and updated across batches rather than "
+        "created once (streaming/events.py:running_user_totals).",
 )
 def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spreadsheet_etl_engine_spark.streaming import events as SE
@@ -1686,7 +1688,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming_seen_index",
     # Same injection scheme (documents re-delivered for doc_id%5==2),
     # so the oracle counts 1 + [doc_id%5=2] copies per document row
-    # WITHOUT seeing the stream.  The stateful operator's final
+    # WITHOUT seeing the stream.  The streaming aggregation's final
     # emission per content hash is (count, min id) — both commutative,
     # so the last row per hash (max n_copies; n strictly increases) is
     # arrival-order-independent and equals the batch exact_dedup row.
@@ -1698,7 +1700,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents GROUP BY md5(text)
     """,
     doc="The incremental_dedup seen-index as streaming state "
-        "(streaming/dedup.py:seen_index_stream, applyInPandasWithState):"
+        "(streaming/dedup.py:seen_index_stream, a streaming aggregation):"
         " one (n_copies, min_id) state row per distinct content hash, "
         "updated across micro-batches (8 files, 2 per trigger) — the "
         "state-store form of the persisted parquet index, emitting the "

@@ -24,9 +24,8 @@ Like every codec here the decode surface is TOTAL-by-name: structurally
 corrupt bytes raise ``ValueError`` with the reason named, which the
 multimodal layer's totality contract maps to (0, 0, 0) — one bad row
 must never kill a 100 TB job.  Compressed fourccs beyond MJPG (XVID,
-H264, ...) raise the named unsupported error: H.264 is the documented
-PIL/ffmpeg extension point (operators/multimodal.py:_decode_compressed),
-not silently wrong output.
+H264, ...) raise the named unsupported error, not silently wrong
+output.
 """
 
 from __future__ import annotations

@@ -28,8 +28,7 @@ Implements the full pipeline with no media libraries:
 
 Scope: arithmetic coding, hierarchical, 12-bit precision, and 16-bit
 quant tables raise ``ValueError`` — they'd be silent wrong-pixel bugs if
-half-supported, and real corpora re-encode them through the same PIL
-extension point as video (`operators.multimodal._decode_compressed`).
+half-supported.
 
 Validation stance: the container has no PIL/libjpeg to cross-check
 against, so conformance is established by (a) round-trip property tests

@@ -271,23 +271,6 @@ def synth_media(spark: SparkSession, n: int = 96, *, real: bool = False) -> Data
     return spark.createDataFrame([make(i) for i in range(n)], MEDIA_SCHEMA)
 
 
-def _decode_compressed(data: bytes) -> tuple[int, int, int]:
-    """Extension point for the containers the numpy codecs can't express:
-    MP3 and H.264 — requires PIL/cv2/ffmpeg, absent here.  The ENTIRE
-    static PNG spec surface (all depths/color types, Adam7 —
-    ``media_codecs.decode_png``) and both JPEG DCT frame types
-    (baseline + progressive — ``media_codecs.decode_jpeg``) decode for
-    real."""
-    raise NotImplementedError(
-        "MP3/H.264 decoding requires "
-        "PIL/cv2/librosa/ffmpeg, which are not installed; BMP/PPM, "
-        "WAV (all PCM widths + IEEE float + G.711 + IMA/MS ADPCM, r14), "
-        "the full static PNG surface (all bit depths/color types incl. "
-        "palette, both interlace modes) and baseline + progressive "
-        "JPEG decode is real (functions.media_codecs)"
-    )
-
-
 def _decode_fake(data: bytes) -> tuple[int, int, int]:
     """Parse the self-describing fake header → (width, height, n_frames)."""
     text = bytes(data).split(b":", 2)

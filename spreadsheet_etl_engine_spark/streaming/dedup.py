@@ -2,8 +2,8 @@
 
 All batch dedup (operators/dedup.py) assumes the corpus is at rest; a
 real training-data pipeline also dedups the feed as it arrives, with
-at-least-once delivery making exact re-deliveries the common case.  Two
-operators, both with batch twins so the DuckDB oracle applies:
+at-least-once delivery making exact re-deliveries the common case.  Three
+operators, all with batch twins so the DuckDB oracle applies:
 
 * :func:`dedup_within_watermark` — exact-copy dedup via
   ``dropDuplicates`` over ALL columns behind a watermark.  Because the
@@ -13,10 +13,10 @@ operators, both with batch twins so the DuckDB oracle applies:
   O(horizon) and O(stream) state.  Final output set ≡ batch
   ``SELECT DISTINCT *`` (order-free, so exactly oracle-able).
 * :func:`seen_index_stream` — the ``incremental_dedup`` seen-index
-  contract as ARBITRARY STATE (``applyInPandasWithState``):
-  ``(n_copies, min_id)`` per content hash, packed into bounded hash
-  groups — the state-store form of the persisted index table
-  ``operators/dedup.py:incremental_dedup`` maintains in parquet.  Every emitted quantity is
+  contract as a streaming aggregation: ``(n_copies, min_id)`` per
+  content hash, one state row per hash — the state-store form of the
+  persisted index table ``operators/dedup.py:incremental_dedup``
+  maintains in parquet.  Every emitted quantity is
   arrival-order-independent at final state (count and min are
   commutative), which is what makes a streaming operator batch-oracle-
   able at all — "first seen" by arrival would be micro-batch-layout
@@ -96,7 +96,7 @@ _STATE_GROUPS_PER_PARTITION = 8
 
 
 def resolve_state_groups(spark: SparkSession) -> int:
-    """Packed-state group count of the stateful dedup operators:
+    """Packed-state group count of :func:`band_candidates_stream`:
     ``8 × spark.sql.shuffle.partitions`` of the session the operator is
     built in (read at construction, so size the width FIRST).
 
@@ -118,15 +118,6 @@ def resolve_state_groups(spark: SparkSession) -> int:
     """
     return _STATE_GROUPS_PER_PARTITION * int(
         spark.conf.get("spark.sql.shuffle.partitions"))
-
-
-# Sentinel for "no non-NULL id seen": keeps the Arrow batch null-free
-# int64 (a nullable id column would arrive in pandas as float64 and
-# corrupt large ids past 2^53 — the same dtype contract as
-# running_user_totals' value_cents) while preserving SQL min()-skips-
-# NULLs semantics: any real id compares smaller, and a group that only
-# ever saw NULL ids emits NULL.
-_NO_ID = (1 << 63) - 1
 
 
 def read_document_stream(
@@ -190,112 +181,28 @@ def dedup_within_watermark(
 def seen_index_stream(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 ) -> DataFrame:
-    """Running content-hash seen-index: ``(n_copies, min id)`` per
-    distinct ``md5(text)``; emits the updated
-    ``(content_hash, rep_doc_id, n_copies)`` row each micro-batch.
+    """Running content-hash seen-index: a streaming aggregation of
+    ``(n_copies, min id)`` per distinct ``md5(text)``.  Run in update
+    mode, it emits the updated ``(content_hash, rep_doc_id, n_copies)``
+    row of every hash touched in a micro-batch.
 
     The final emission per hash is the batch ``exact_dedup`` row
     (count + min-id representative) regardless of arrival order —
     count and min are the commutative core of the survivorship
     contract, which is why this is oracle-able while a "first arrival
-    wins" index is not.  State is 16 bytes per distinct hash; the
-    continuous-deployment bound is the same as the parquet index
-    in ``incremental_dedup`` (distinct content, not corpus rows), with
-    RocksDB state-store backing at 100 TB.
+    wins" index is not.  SQL semantics hold throughout: ``min`` skips
+    NULL ids (a hash that only saw NULL ids emits NULL), and NULL text
+    hashes to the NULL content group, a real row of the index.
 
-    State LAYOUT (result-identical, same rationale as
-    :func:`band_candidates_stream`): hashes are packed into
-    :func:`resolve_state_groups` groups per state row instead of one
-    state row per distinct hash — ``applyInPandasWithState`` pays ~1 ms
-    of fixed serializer cost per GROUP per batch, so a
-    one-group-per-hash layout costs O(distinct hashes) of pure overhead
-    every micro-batch.  The stateful key is
-    ``pmod(xxhash64(content_hash), groups)``; each group's state holds
-    its hashes' counters as parallel arrays, per-batch counting is one
-    pandas groupby, and the per-touched-hash emission (count + min over
-    the sentinel-encoded id) is unchanged row-for-row.  The group count
-    follows the width of the session ``docs`` belongs to — see
-    :func:`resolve_state_groups` for sizing and the checkpoint-rekey
-    consequences (a checkpoint written by the one-row-per-hash layout
-    cannot be restored: use a fresh ``checkpointLocation``).
+    The state is Spark's own aggregation buffer, one row per distinct
+    hash, keyed by the hash itself; a restart restores it from the
+    checkpoint whatever the caller's shuffle width.  It grows with
+    distinct content, not corpus rows, the same bound as the parquet
+    index ``incremental_dedup`` keeps.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    groups = resolve_state_groups(docs.sparkSession)
-    output_schema = "content_hash string, rep_doc_id long, n_copies long"
-    state_schema = "hashes array<string>, ns array<long>, min_ids array<long>"
-
-    def update(key, pdf_iter, state):
-        import numpy as np
-
-        if state.exists:
-            hs, ns, mids = state.get
-            seen: dict[str, list[int]] = {
-                h: [int(n), int(m)] for h, n, m in zip(hs, ns, mids)
-            }
-        else:
-            seen = {}
-        touched: dict[str, bool] = {}
-        for pdf in pdf_iter:
-            ids = pdf["id_nn"]
-            if not np.issubdtype(ids.dtype, np.integer):
-                raise TypeError(
-                    f"id_nn arrived as {ids.dtype}, not int64 — the "
-                    "seen-index contract requires the null-free sentinel "
-                    "column (see the coalesce in seen_index_stream)"
-                )
-            # dropna=False: a NULL text hashes to the NULL content
-            # group, which is a real row of the index (SQL GROUP BY
-            # semantics — pinned by the equals-batch test).
-            g = pdf.groupby("content_hash", dropna=False)["id_nn"].agg(
-                ["count", "min"])
-            for h, n, mn in zip(g.index.tolist(), g["count"].tolist(),
-                                g["min"].tolist()):
-                h = None if h is None or (isinstance(h, float)) else h
-                rec = seen.get(h)
-                if rec is None:
-                    rec = [0, _NO_ID]
-                    seen[h] = rec
-                rec[0] += int(n)
-                rec[1] = min(rec[1], int(mn))
-                touched[h] = True
-        nkey = lambda h: (h is None, h or "")  # None sorts LAST (True > False); any fixed order works — determinism of the state bytes is all that matters
-        if seen:
-            items = sorted(seen.items(), key=lambda kv: nkey(kv[0]))
-            state.update((                     # deterministic state bytes
-                [h for h, _ in items],
-                [r[0] for _, r in items],
-                [r[1] for _, r in items],
-            ))
-        out = sorted(touched, key=nkey)
-        yield pd.DataFrame(
-            {
-                "content_hash": out,
-                "rep_doc_id": [
-                    None if seen[h][1] == _NO_ID else seen[h][1]
-                    for h in out
-                ],
-                "n_copies": [seen[h][0] for h in out],
-            }
-        )
-
-    return (
-        docs.select(
-            F.md5(F.col(text_col)).alias("content_hash"),
-            F.coalesce(
-                F.col(id_col).cast("long"), F.lit(_NO_ID).cast("long")
-            ).alias("id_nn"),
-        )
-        .withColumn(
-            "_state_group",
-            F.pmod(F.xxhash64("content_hash"), F.lit(groups)),
-        )
-        .groupBy("_state_group")
-        .applyInPandasWithState(
-            update, output_schema, state_schema, "update",
-            GroupStateTimeout.NoTimeout,
-        )
+    return docs.groupBy(F.md5(F.col(text_col)).alias("content_hash")).agg(
+        F.min(F.col(id_col).cast("long")).alias("rep_doc_id"),
+        F.count(F.lit(1)).alias("n_copies"),
     )
 
 

@@ -9,8 +9,10 @@ streaming is an [EXT] capability.  Design:
 * tumbling / sliding windows via ``F.window``, session windows via
   ``F.session_window`` — all have exact batch twins registered in
   ``ext_queries`` so the DuckDB oracle can check the aggregation logic;
-* a custom stateful operator (running per-user counters) via
-  ``applyInPandasWithState`` showing the arbitrary-state escape hatch.
+* running per-user totals as a streaming aggregation in update mode
+  (``running_user_totals``): Spark keeps one state row per user id, so
+  no Python worker runs and a restart restores the state from the
+  checkpoint.
 
 Tests drive these with the file source + ``availableNow`` trigger and a
 memory sink, then diff against the batch twin.
@@ -181,131 +183,32 @@ def view_click_attribution(
     )
 
 
-def running_user_totals(
-    events: DataFrame, *, idle_timeout_ms: int | None = None
-) -> DataFrame:
-    """Custom stateful operator: running per-user event count and value sum
-    maintained with ``applyInPandasWithState`` — the escape hatch when
-    built-in windows can't express the state machine.  Emits one row per
-    user per micro-batch with the updated totals.
+def running_user_totals(events: DataFrame) -> DataFrame:
+    """Running per-user event count and value sum: a streaming
+    aggregation keyed by ``user_id``.  Run in update mode, it emits one
+    row per user touched in each micro-batch, carrying that user's
+    totals so far.
 
-    State-bounding is OPT-IN via ``idle_timeout_ms`` (processing-time
-    timeout): a user silent that long has their state row evicted
-    (emitting a final row with the last totals), so a CONTINUOUS
-    deployment tracks only recently-active users instead of every user
-    id ever seen — without it, unbounded key cardinality OOMs a
-    week-long run, which is why a production continuous stream must set
-    it.  A user returning after eviction restarts from zero — the
-    standard trade: running-forever totals belong in a batch aggregate
-    over the archived stream, not in stream state.
+    The state is Spark's own aggregation buffer, one row per user id
+    (a count and a decimal sum), so a restart restores it from the
+    checkpoint whatever the caller's shuffle width.  State grows with
+    the number of distinct users; running-forever totals belong in a
+    batch aggregate over the archived stream.
 
-    The default is ``None`` (no eviction) because processing-time
-    timeouts interact badly with the ``availableNow`` backfill/test
-    harness: the query keeps scheduling micro-batches until wall-clock
-    timeouts fire (observed: hundreds of empty batches), so
-    catch-up/backfill runs — whose state is bounded by the run's total
-    key count anyway — should leave it off and continuous deployments
-    should turn it on.
-
-    The running sum is EXACT, not float (r11): ``value`` is cast to
-    integer cents Spark-side under the engine-wide decimal(18,2)
-    measure contract — the ANSI decimal cast fails loud on NaN/±inf and
-    on magnitudes past the cap, the same stance as
-    ``functions.numeric.finite_or_fail`` and the same arithmetic every
-    batch twin's oracle uses — and the state accumulates Python ints
-    (arbitrary precision; the int64 state-store boundary is guarded
-    fail-loud).  A float64 accumulator drifted ~1e-2 on 1e12-magnitude
-    values depending on arrival order (edge family 5), which is both
-    nondeterministic across retries and unreconcilable with an exact
-    decimal oracle.  The emitted ``total_value`` is the correctly-
-    rounded double of the exact cent total.
+    The sum is exact: ``value`` is cast to decimal(18,2) under the
+    engine-wide measure contract (the ANSI cast fails loud on NaN/±inf
+    and on magnitudes past the cap, as the batch twins' arithmetic
+    does), scaled to integer cents and accumulated as decimal(38,0),
+    which cannot wrap.  A NULL value contributes nothing, and a user
+    whose every value is NULL totals 0.  ``total_value`` is the exact
+    cent total divided by 100 in decimal, then cast to double: the
+    correctly rounded double of the exact total, independent of
+    arrival order.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    output_schema = "user_id long, n_events long, total_value double"
-    state_schema = "n long, total_cents long"
-    timeout = (GroupStateTimeout.NoTimeout if idle_timeout_ms is None
-               else GroupStateTimeout.ProcessingTimeTimeout)
-
-    def _as_double(cents: int) -> float:
-        from decimal import Decimal
-
-        # float(Decimal)/100 in one exact step: correctly rounded for ANY
-        # cent total (float(cents)/100.0 double-rounds past 2^53).
-        return float(Decimal(cents) / 100)
-
-    def update(key, pdf_iter, state):
-        import numpy as np
-
-        if state.hasTimedOut:
-            n, cents = state.get if state.exists else (0, 0)
-            state.remove()          # evict: bounded state
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n],
-                 "total_value": [_as_double(cents)]}
-            )
-            return
-        n, cents = state.get if state.exists else (0, 0)
-        for pdf in pdf_iter:
-            n += len(pdf)
-            # value_cents is coalesced to 0 Spark-side (NULL value =
-            # zero contribution, exactly SQL sum semantics), so the
-            # Arrow batch is null-free and pandas keeps int64 — a
-            # nullable column would arrive as float64, which silently
-            # rounds ODD cent totals past 2^53 (reachable inside the
-            # decimal(18,2) domain: 90071992547409.93 units is 2^53+1
-            # cents).  tolist() yields Python ints; sum() over them is
-            # exact at any magnitude.  The dtype check fails loud if a
-            # float column ever sneaks back in.
-            c = pdf["value_cents"]
-            if not np.issubdtype(c.dtype, np.integer):
-                raise TypeError(
-                    f"value_cents arrived as {c.dtype}, not int64 — the "
-                    "exact-cents contract requires a null-free integer "
-                    "column (see the coalesce in running_user_totals)"
-                )
-            cents += sum(c.tolist())
-        if not (-(2**63) < cents < 2**63):  # pragma: no cover — 9.2e16 units
-            raise ValueError(
-                f"running_user_totals: total for user {key[0]} overflows "
-                "the int64 cent state (|total| >= 2^63 cents); this feed "
-                "needs a wider state type or per-window totals"
-            )
-        state.update((n, cents))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n],
-             "total_value": [_as_double(cents)]}
-        )
-
-    # Project BEFORE the stateful op: applyInPandasWithState ships every
-    # input column through Arrow into pandas, so (a) wide rows (props,
-    # event_type) would cross the Python boundary for nothing — at
-    # 100 TB the Arrow batch width IS the transfer cost — and (b) a
-    # timestamp column would hit pandas' ns-range limit (year 9999
-    # overflows timestamp[ns]; ArrowInvalid kills the stream — edge
-    # family 2 find).  The cents cast lives here too, so every value
-    # semantics decision (rounding, NaN, overflow) is made by the SAME
-    # Spark/ANSI arithmetic the batch twins and their oracles use —
-    # Python only ever sees exact integers.
-    return (
-        events.select(
-            "user_id",
-            # coalesce(., 0): NULL contributes nothing to the sum (SQL
-            # semantics) AND keeps the Arrow batch null-free so pandas
-            # receives exact int64, never float64 — see the dtype check
-            # in update().
-            F.coalesce(
-                (F.col("value").cast("decimal(18,2)") * 100).cast("long"),
-                F.lit(0).cast("long"),
-            ).alias("value_cents"),
-        )
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update, output_schema, state_schema, "update", timeout
-        )
+    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("decimal(38,0)")
+    return events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        (F.coalesce(F.sum(cents), F.lit(0)) / 100).cast("double").alias("total_value"),
     )
 
 

@@ -46,11 +46,6 @@ def test_corrupt_media_never_kills_the_job(spark):
     assert resized == {i: bytes(b) for i, _k, b, _s in bad}
 
 
-def test_compressed_decode_is_marked_stub():
-    with pytest.raises(NotImplementedError, match="PIL/cv2/librosa"):
-        MM._decode_compressed(b"anything")
-
-
 def test_real_media_decode_end_to_end(spark):
     """BMP/PPM/WAV bytes decode through the Arrow pipeline with real
     dimensions — no fake headers involved."""

@@ -178,10 +178,10 @@ def test_star_components_flat_under_diameter_growth(spark):
 
 
 def test_stateful_stream_scales_with_state(spark):
-    """r11: the applyInPandasWithState operator as a REAL availableNow
-    stream at 10x events AND 10x users (state rows, groups per batch
-    and Arrow transfer all grow 10x; micro-batch count fixed at 4).
-    Recorded 2.14x — fixed per-batch overhead dilutes the growth; the
+    """running_user_totals (a streaming aggregation) as a REAL
+    availableNow stream at 10x events AND 10x users (state rows and
+    per-batch state updates grow 10x; micro-batch count fixed at 4).
+    Fixed per-batch overhead dilutes the growth; the
     bound is a catastrophic ceiling (a per-key quadratic or state
     explosion reads >10x), not a precision pin."""
     import scale_probe as SP

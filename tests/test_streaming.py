@@ -940,3 +940,48 @@ def test_stateful_stream_queries_run_at_once_and_match_oracles(spark, sf_dir):
         assert collections.Counter(tuple(r[c] for c in cols) for r in rows) == want
         assert len(want) > 0, name
     con.close()
+
+
+def test_seen_index_restart_at_a_new_width_keeps_counting(spark, sf_dir, tmp_path):
+    """A seen-index checkpoint restarted under another shuffle width
+    continues from its state: after the second run re-delivers every
+    document, each hash's last emitted ``n_copies`` equals the batch
+    count over everything delivered.  foreachBatch sink: a memory sink
+    cannot recover in update mode."""
+    from spreadsheet_etl_engine_spark.streaming import dedup as SD
+
+    docs = load_table(spark, sf_dir, "documents")
+    src, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    docs.write.parquet(src)
+
+    def write_fb(batch_df, epoch_id):
+        batch_df.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(out)
+
+    def run_at(width):
+        session = spark.newSession()
+        session.conf.set(PARTS, str(width))
+        q = (
+            SD.seen_index_stream(SD.read_document_stream(session, src))
+            .writeStream.foreachBatch(write_fb)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    run_at(2)
+    docs.write.mode("append").parquet(src)  # re-deliver every document
+    run_at(5)
+    got = {
+        r["content_hash"]: r["n"]
+        for r in spark.read.parquet(out).groupBy("content_hash")
+        .agg(F.max_by("n_copies", "epoch").alias("n")).collect()
+    }
+    want = {
+        r["content_hash"]: r["n"]
+        for r in spark.read.parquet(src).groupBy(F.md5("text").alias("content_hash"))
+        .agg(F.count("*").alias("n")).collect()
+    }
+    wrong = {h for h in want if got.get(h) != want[h]}
+    assert not wrong, f"{len(wrong)} of {len(want)} hashes have the wrong n_copies"
